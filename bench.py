@@ -140,7 +140,6 @@ OPERATOR_KEYS = [
     "dedup_components",
     "simhash",
     "simhash_near_dups",
-    "mm_image_stats",
     "ngram_jaccard_lsh",
     "ivf_topk",
     "ivf_assign",
@@ -148,8 +147,6 @@ OPERATOR_KEYS = [
     "minhash_dedup_edges",
     "streaming_exact_dedup",
     "streaming_sessionize",
-    "mm_frame_sample",
-    "mm_audio_stats",
     "pii_redact",
     "ngram_contamination",
     "repetition_stats",
@@ -200,14 +197,8 @@ OPERATOR_KEYS = [
     "warc_wet_pipeline",
     "suffix_dup_spans",
     "hnsw_topk",
-    "mm_progressive_jpeg_stats",
-    "mm_jpeg_420_stats",
     "rp_project",
     "host_stats",
-    "mm_phash",
-    "phash_near_dups",
-    "mm_png_stats",
-    "mm_jpeg_stats",
     "bm25_topk",
     "bpe_train",
     "marshal_parity",
@@ -216,7 +207,6 @@ OPERATOR_KEYS = [
     "pq_topk",
     "bpe_encode",
     "warc_roundtrip",
-    "mm_audio_features",
     "failure_backoff",
     "sitemap_index",
     "host_alias",
@@ -225,7 +215,6 @@ OPERATOR_KEYS = [
     "cache_freshness",
     "warc_revisit",
     "frontier_priority",
-    "mm_mjpeg_stats",
     "charset_decode",
     "registered_domain",
     "nfc_normalize",

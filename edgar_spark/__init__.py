@@ -8,8 +8,7 @@ A from-scratch re-expression of the semantics of the reference Go engine
 - ``edgar_spark.model``     relational schemas + facts→filings consolidation
   expressed as DataFrame ops (window dedup, conditional agg, coalesce).
 - ``edgar_spark.operators`` Arrow-vectorized UDF wrappers plus the
-  training-data-pipeline operators (dedup, similarity, text analysis,
-  multimodal plumbing).
+  training-data-pipeline operators (dedup, similarity, text analysis).
 - ``edgar_spark.frontier``  the 10^10-design-scale URL frontier: priority
   queue, bloom URL-seen, politeness buckets, robots gating, wave scheduler.
 - ``edgar_spark.icelite``   Iceberg-style snapshot/manifest table layout over

@@ -85,7 +85,6 @@ class CrawlConfig:
     # 2 × defaultParallelism.
     parse_partitions: Optional[int] = None
     checkpoint_dir: Optional[str] = None
-    use_bloom: bool = True
     # "bloom" (sharded, append-only; the 10^10 scale path) or "cuckoo"
     # (supports delete — enables mark_for_recrawl; sharded like the bloom:
     # executors hash, kick loops run per-shard in applyInPandas tasks)
@@ -177,9 +176,7 @@ class Crawler:
             self.cfg.checkpoint_dir or tempfile.mkdtemp(prefix="edgar_spark_ckpt_")
         )
         self._last_metrics: Optional[dict] = None
-        if not self.cfg.use_bloom:
-            self._bloom = None
-        elif self.cfg.seen_filter == "cuckoo":
+        if self.cfg.seen_filter == "cuckoo":
             from edgar_spark.frontier.bloom import ShardedCuckoo
 
             self._bloom = ShardedCuckoo(
@@ -479,41 +476,27 @@ class Crawler:
             # evict would then false-negative it). "Rows that joined this
             # wave" is the only set that keeps copy-count == row-count,
             # which is what makes a single delete() per evicted row sound.
-            if self._bloom is not None:
-                probed = self._bloom.probe(candidates, "url").persist()
-                # the agg scans EVERY partition, fully materializing the
-                # persisted probe — the maybe_seen flags reused by the
-                # snapshot write come from the cache, one filter state
-                stats = probed.agg(
-                    F.count("*").alias("n"),
-                    F.coalesce(
-                        F.sum(F.when(~F.col("maybe_seen"), 1).otherwise(0)),
-                        F.lit(0),
-                    ).alias("new"),
-                ).collect()[0]
-                n_candidates, n_bloom_passed = stats["n"], int(stats["new"])
-                if n_candidates == 0:
-                    new_rows = probed.drop("maybe_seen")  # empty
-                else:
-                    definitely_new = probed.filter(~F.col("maybe_seen")).drop(
-                        "maybe_seen"
-                    )
-                    maybe_seen = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-                    confirmed_new = maybe_seen.join(
-                        frontier.select("url"), "url", "left_anti"
-                    )
-                    new_rows = definitely_new.unionByName(confirmed_new)
+            probed = self._bloom.probe(candidates, "url").persist()
+            # the agg scans EVERY partition, fully materializing the
+            # persisted probe — the maybe_seen flags reused by the
+            # snapshot write come from the cache, one filter state
+            stats = probed.agg(
+                F.count("*").alias("n"),
+                F.coalesce(
+                    F.sum(F.when(~F.col("maybe_seen"), 1).otherwise(0)),
+                    F.lit(0),
+                ).alias("new"),
+            ).collect()[0]
+            n_candidates, n_bloom_passed = stats["n"], int(stats["new"])
+            if n_candidates == 0:
+                new_rows = probed.drop("maybe_seen")  # empty
             else:
-                candidates = candidates.persist()
-                probed = candidates
-                n_candidates = candidates.count()
-                n_bloom_passed = 0
-                if n_candidates == 0:
-                    new_rows = candidates
-                else:
-                    new_rows = candidates.join(
-                        frontier.select("url"), "url", "left_anti"
-                    )
+                definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
+                maybe_seen = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
+                confirmed_new = maybe_seen.join(
+                    frontier.select("url"), "url", "left_anti"
+                )
+                new_rows = definitely_new.unionByName(confirmed_new)
 
         # parse-failure lineage: a fetched page whose kind-specific marker is
         # absent never reaches its parser (the Sparser-style prefilter) —
@@ -671,7 +654,7 @@ class Crawler:
         # distributed position build (bloom) / int-pair build (cuckoo).
         # BOTH paths add the same set, so filter contents never depend on
         # wave size.
-        if self._bloom is not None and n_new > 0:
+        if n_new > 0:
             new_urls = frontier_next.filter(
                 (F.col("state") == "pending") & (F.col("wave_added") == wave_no)
             ).select("url")
@@ -701,12 +684,10 @@ class Crawler:
     def run(self) -> CrawlResult:
         frontier = self.seed_frontier()
         facts = _empty(self.spark, FACTS_SCHEMA)
-        if self._bloom is not None:
-            # seed list is small by design (a fixed CIK list): hash the seed
-            # query-URLs driver-side — no distributed build for a few
-            # hundred rows
-            for row in frontier.select("url").collect():
-                self._bloom.add(row["url"])
+        # seed list is small by design (a fixed CIK list): hash the seed
+        # query-URLs driver-side — no distributed build for a few hundred rows
+        for row in frontier.select("url").collect():
+            self._bloom.add(row["url"])
         return self._loop(frontier, facts, start_wave=0, metrics=[])
 
     @classmethod
@@ -737,7 +718,7 @@ class Crawler:
                     cfg.bloom_hashes,
                 )
             )
-        elif self._bloom is not None:
+        else:
             # distributed hashing, driver-side insertion of int pairs only
             self._bloom.add_positions(frontier.select("url"), "url")
         return self._loop(frontier, facts, start_wave=last_wave + 1, metrics=[])
@@ -878,7 +859,7 @@ class Crawler:
                 "evicted": len(urls),
             },
         )
-        if self._bloom is not None and hasattr(self._bloom, "delete"):
+        if hasattr(self._bloom, "delete"):
             for u in urls:
                 self._bloom.delete(u)
 

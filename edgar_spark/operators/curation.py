@@ -622,9 +622,11 @@ def domain_quality(
 
     Plan shape: one groupBy(reg_domain) over (domain, q_milli) — a
     map-side partial aggregate to ~one row per domain — then the
-    domain verdict broadcast-joins back onto the corpus (the domain
-    table is O(10^7) rows at web scale, far under the corpus; spill to
-    a shuffle join only if a broadcast cap forces it). Docs whose host
+    domain verdict joins back onto the corpus. The join carries no
+    broadcast hint: the planner broadcasts the domain table while its
+    size estimate is under ``spark.sql.autoBroadcastJoinThreshold``
+    and falls back to a shuffle join above it (the domain table is
+    O(10^7) rows at web scale, unbounded by any cap). Docs whose host
     yields no registered domain (the host IS a public suffix) are
     gated out — a crawler shouldn't be keeping them anyway.
 
@@ -676,7 +678,7 @@ def domain_quality(
     )
     return (
         scored.filter(F.col("reg_domain").isNotNull())
-        .join(F.broadcast(dom), "reg_domain")
+        .join(dom, "reg_domain")
         .select(
             id_col,
             "reg_domain",

@@ -548,25 +548,6 @@ def _simhash_band_pairs(
     )
 
 
-def hash_near_dups(
-    df: DataFrame,
-    hash_col: str = "simhash",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    n_chunks: int = 4,
-    bucket_cap: int = None,
-) -> DataFrame:
-    """Hamming near-dup pairs over ANY precomputed 64-bit hash column —
-    the public entry to the combination-banding core shared by
-    `simhash_near_dups` (text fingerprints) and the perceptual image
-    hash (`multimodal.image_ahash`): pass (id, hash) and get
-    (id_a, id_b, hamming ≤ max_hamming) with pigeonhole-exact recall and
-    never an all-pairs join. Same `n_chunks`/`bucket_cap` scale levers
-    as the simhash pipeline."""
-    sigs = df.select(F.col(id_col), F.col(hash_col).alias("simhash"))
-    return _simhash_band_pairs(sigs, max_hamming, n_chunks, id_col, bucket_cap)
-
-
 def simhash_dedup_edges(
     df: DataFrame,
     max_hamming: int = 3,

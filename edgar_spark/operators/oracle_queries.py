@@ -369,51 +369,6 @@ def q_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "centroid_id")
 
 
-def q_mm_byte_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal binary-column stats: documents text re-encoded as an opaque
-    payload, length + content hash computed JVM-side."""
-    from edgar_spark.operators.multimodal import byte_stats
-
-    media = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode(F.col("text"), "utf-8").alias("payload")
-    )
-    return byte_stats(media).select("doc_id", "n_bytes", "payload_md5")
-
-
-def q_mm_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode end-to-end: each document's first 24 codepoints
-    (mod 256) become the RGB pixels of a 4×2 24-bpp BMP, serialized with
-    encode_bmp (bottom-up rows, BGR, padding) and decoded back by the pure
-    struct+numpy BMP decoder inside image_stats. The oracle recomputes the
-    expected means straight from the text codepoints — a channel-order or
-    row-layout bug in the decoder cannot pass."""
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import encode_bmp, image_stats
-
-    docs = _t(spark, sf_dir, "documents")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for t in pdf.itertuples(index=False):
-                s = t.text or ""
-                vals = [
-                    (ord(s[i]) % 256) if i < len(s) else 0 for i in range(24)
-                ]
-                px = np.array(vals, dtype=np.uint8).reshape(2, 4, 3)
-                ids.append(t.doc_id)
-                payloads.append(encode_bmp(px))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.select("doc_id", "text").mapInPandas(
-        gen, schema="media_id long, payload binary"
-    )
-    return image_stats(media).withColumnRenamed("media_id", "doc_id")
-
-
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition metrics (top-word / top-bigram / duplicate-
     bigram fractions) over the documents table — the repetition leg of
@@ -591,44 +546,6 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_mm_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode end-to-end: each document's first 32 codepoints
-    become int16 PCM samples ((cp % 256 − 128) · 256, zero-padded) of a
-    2-channel 8 kHz WAV, serialized with encode_wav and decoded back by
-    the pure struct+numpy WAV parser inside audio_stats. The oracle
-    recomputes rate/frames/duration/rms analytically from the codepoints —
-    a chunk-walk, interleave, or scaling bug in the decoder cannot pass.
-    All sample values are dyadic rationals (v/128), so the float64
-    rms is bit-identical between numpy and DuckDB."""
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import audio_stats, encode_wav
-
-    docs = _t(spark, sf_dir, "documents")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for t in pdf.itertuples(index=False):
-                s = t.text or ""
-                vals = [
-                    ((ord(s[i]) % 256) - 128) * 256 if i < len(s) else 0
-                    for i in range(32)
-                ]
-                ids.append(t.doc_id)
-                payloads.append(
-                    encode_wav(np.array(vals, dtype="<i2"), rate=8000, n_channels=2)
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.select("doc_id", "text").mapInPandas(
-        gen, schema="media_id long, payload binary"
-    )
-    return audio_stats(media).withColumnRenamed("media_id", "doc_id")
-
-
 def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LLM-training-data pipeline end-to-end in one plan: exact-dedup
     representatives → language filter (en) → quality gate → per-source
@@ -687,22 +604,6 @@ def q_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_contamination(
         docs.filter(F.col("doc_id") >= 25), docs.filter(F.col("doc_id") < 25), n=4
     )
-
-
-def q_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw-video frame sampling: documents text re-encoded as a raw
-    concatenated-frame payload (4×2 px × 3 bpp = 24-byte frames), every
-    2nd frame sliced and md5-fingerprinted entirely JVM-side. The oracle
-    reproduces the byte slicing with BLOB substring in SQL."""
-    from edgar_spark.operators.multimodal import video_frame_sample
-
-    media = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id"),
-        F.encode(F.col("text"), "utf-8").alias("payload"),
-        F.lit(4).alias("width"),
-        F.lit(2).alias("height"),
-    )
-    return video_frame_sample(media, every_k=2, id_col="doc_id")
 
 
 def q_events_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1065,10 +966,6 @@ _QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ivf_assign": q_ivf_assign,
     "streaming_exact_dedup": q_streaming_exact_dedup,
     "corpus_curation": q_corpus_curation,
-    "mm_byte_stats": q_mm_byte_stats,
-    "mm_image_stats": q_mm_image_stats,
-    "mm_audio_stats": q_mm_audio_stats,
-    "mm_frame_sample": q_mm_frame_sample,
     "pii_redact": q_pii_redact,
     "ngram_contamination": q_ngram_contamination,
     "repetition_stats": q_repetition_stats,
@@ -1332,46 +1229,6 @@ _ORACLES: Dict[str, str] = {
         SELECT d.doc_id, count(DISTINCT d.g) AS n_overlap
         FROM d JOIN p ON p.g = d.g
         GROUP BY d.doc_id
-    """,
-    "mm_frame_sample": """
-        -- documents text is pure ASCII (octet_length(encode(text)) =
-        -- length(text) holds for every row), so VARCHAR substring/md5
-        -- are byte-exact against Spark's binary slicing of encode(text)
-        WITH m AS (
-            SELECT doc_id, text, CAST(4 * 2 * 3 AS BIGINT) AS fs,
-                   CAST(floor(length(text) / (4 * 2 * 3)) AS BIGINT)
-                       AS n_frames
-            FROM documents
-        ), idx AS (
-            SELECT doc_id, text, fs, n_frames,
-                   unnest(range(n_frames)) AS frame_idx
-            FROM m WHERE n_frames > 0
-        )
-        SELECT doc_id, frame_idx, n_frames,
-               md5(substring(text, CAST(frame_idx * fs + 1 AS BIGINT),
-                             fs)) AS frame_md5
-        FROM idx WHERE frame_idx % 2 = 0
-    """,
-    "mm_byte_stats": """
-        SELECT doc_id,
-               octet_length(encode(text)) AS n_bytes,
-               md5(text) AS payload_md5
-        FROM documents
-    """,
-    "mm_image_stats": """
-        WITH px AS (
-            SELECT doc_id,
-                   list_transform(range(24),
-                       i -> CASE WHEN i < length(text)
-                                 THEN ascii(substr(text, CAST(i AS INT) + 1, 1)) % 256
-                                 ELSE 0 END) AS v
-            FROM documents
-        )
-        SELECT doc_id, 4 AS width, 2 AS height,
-               round(list_sum(v) / 24.0, 6) AS mean_all,
-               round(list_sum(list_transform(range(8), k -> v[k*3 + 3])) / 8.0, 6)
-                   AS mean_b
-        FROM px
     """,
     "repetition_stats": """
         WITH tk AS (
@@ -1725,27 +1582,6 @@ _ORACLES: Dict[str, str] = {
         SELECT doc_id, url, canon,
                lower(regexp_extract(canon, '^(?i:https?)://(?:[^/?#@]*@)?([^/?#]+)', 1)) AS host
         FROM k
-    """,
-    "mm_audio_stats": """
-        WITH v AS (
-            SELECT doc_id,
-                   list_transform(range(32),
-                       i -> CASE WHEN i < length(text)
-                                 THEN (ascii(substr(text, CAST(i AS INT) + 1, 1))
-                                       % 256) - 128
-                                 ELSE 0 END) AS s
-            FROM documents
-        )
-        SELECT doc_id,
-               8000 AS sample_rate,
-               16 AS n_frames,
-               2 AS n_channels,
-               2 AS duration_ms,
-               round_even(
-                   sqrt(list_sum(list_transform(
-                       s, x -> (x / 128.0) * (x / 128.0))) / 32.0),
-                   6) AS rms
-        FROM v
     """,
     "corpus_curation": """
         WITH reps AS (
@@ -2993,71 +2829,6 @@ _WARC_ROUNDTRIP_ORACLE = """
 
 _QUERIES["warc_roundtrip"] = q_warc_roundtrip
 _ORACLES["warc_roundtrip"] = _WARC_ROUNDTRIP_ORACLE
-
-
-def q_mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio curation features through the REAL WAV roundtrip (same
-    2-channel synthesis as mm_audio_stats): zero-crossing count on
-    channel 0, peak amplitude, silence census — all exact int16-grid
-    integers (multimodal.audio_features), replayed analytically from the
-    codepoints by the oracle."""
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import audio_features, encode_wav
-
-    docs = _t(spark, sf_dir, "documents")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for t in pdf.itertuples(index=False):
-                s = t.text or ""
-                vals = [
-                    ((ord(s[i]) % 256) - 128) * 256 if i < len(s) else 0
-                    for i in range(32)
-                ]
-                ids.append(t.doc_id)
-                payloads.append(
-                    encode_wav(
-                        np.array(vals, dtype="<i2"), rate=8000, n_channels=2
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.select("doc_id", "text").mapInPandas(
-        gen, schema="media_id long, payload binary"
-    )
-    return (
-        audio_features(media)
-        .withColumnRenamed("media_id", "doc_id")
-        .orderBy("doc_id")
-    )
-
-
-_MM_AUDIO_FEATURES_ORACLE = """
-    WITH v AS (
-        SELECT doc_id,
-               list_transform(range(32),
-                   i -> CASE WHEN i < length(text)
-                             THEN (ascii(substr(text, CAST(i AS INT) + 1, 1))
-                                   % 256 - 128) * 256
-                             ELSE 0 END) AS s
-        FROM documents
-    )
-    SELECT doc_id,
-           32 AS n_samples,
-           CAST(len(list_filter(range(15),
-                k -> s[CAST(2*k AS INT) + 1] * s[CAST(2*k AS INT) + 3] < 0))
-                AS INT) AS zcr,
-           CAST(list_max(list_transform(s, x -> abs(x))) AS INT) AS peak,
-           CAST(len(list_filter(s, x -> abs(x) < 512)) AS INT) AS n_silent
-    FROM v ORDER BY doc_id"""
-
-
-_QUERIES["mm_audio_features"] = q_mm_audio_features
-_ORACLES["mm_audio_features"] = _MM_AUDIO_FEATURES_ORACLE
 
 
 def q_failure_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5735,424 +5506,6 @@ _QUERIES["host_stats"] = q_host_stats
 _ORACLES["host_stats"] = _host_stats_oracle_sql()
 
 
-def q_mm_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual average-hash through a REAL encode→decode roundtrip:
-    each document's first 192 codepoints (mod 256) become an 8×8 24-bpp
-    BMP, serialized with encode_bmp and decoded back by the struct+numpy
-    BMP decoder inside image_ahash; the 64-bit hash thresholds each
-    cell's integer luma (r+g+b) against the grid total. The oracle
-    recomputes the hash straight from the text codepoints with the same
-    cross-multiplied integer threshold and signed two's-complement pack
-    — a pixel-layout or channel bug in the decoder cannot pass
-    (operators/multimodal.image_ahash)."""
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import encode_bmp, image_ahash
-
-    docs = _t(spark, sf_dir, "documents")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for t in pdf.itertuples(index=False):
-                s = t.text or ""
-                vals = [
-                    (ord(s[i]) % 256) if i < len(s) else 0 for i in range(192)
-                ]
-                px = np.array(vals, dtype=np.uint8).reshape(8, 8, 3)
-                ids.append(t.doc_id)
-                payloads.append(encode_bmp(px))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.select("doc_id", "text").mapInPandas(
-        gen, schema="media_id long, payload binary"
-    )
-    return (
-        image_ahash(media)
-        .withColumnRenamed("media_id", "doc_id")
-        .orderBy("doc_id")
-    )
-
-
-def _mm_phash_oracle_sql() -> str:
-    pow2 = (
-        "[" + ",".join(f"CAST({1 << i} AS HUGEINT)" for i in range(64)) + "]"
-    )
-    return f"""
-    WITH lum AS (
-        SELECT doc_id, CAST(i AS INT) AS cell,
-               (CASE WHEN length(text) >= 3*i + 1
-                     THEN ord(substr(text, CAST(3*i + 1 AS INT), 1)) % 256
-                     ELSE 0 END
-              + CASE WHEN length(text) >= 3*i + 2
-                     THEN ord(substr(text, CAST(3*i + 2 AS INT), 1)) % 256
-                     ELSE 0 END
-              + CASE WHEN length(text) >= 3*i + 3
-                     THEN ord(substr(text, CAST(3*i + 3 AS INT), 1)) % 256
-                     ELSE 0 END) AS luma
-        FROM documents
-        CROSS JOIN unnest(generate_series(0, 63)) AS t(i)
-    ), tot AS (
-        SELECT doc_id, SUM(luma) AS total FROM lum GROUP BY doc_id
-    ), bits AS (
-        SELECT l.doc_id, cell,
-               CASE WHEN luma * 64 >= total THEN 1 ELSE 0 END AS b
-        FROM lum l JOIN tot USING (doc_id)
-    ), raw AS (
-        SELECT doc_id,
-               SUM(CASE WHEN b = 1 THEN {pow2}[cell + 1]
-                        ELSE CAST(0 AS HUGEINT) END) AS u
-        FROM bits GROUP BY doc_id
-    )
-    SELECT doc_id,
-           CAST(CASE WHEN u >= 9223372036854775808::HUGEINT
-                     THEN u - 18446744073709551616::HUGEINT
-                     ELSE u END AS BIGINT) AS ahash
-    FROM raw ORDER BY doc_id"""
-
-
-_QUERIES["mm_phash"] = q_mm_phash
-_ORACLES["mm_phash"] = _mm_phash_oracle_sql()
-
-
-def q_phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Visual near-dup pairs end-to-end: formula-synthesized 8×8 images
-    (doc pairs 2k/2k+1 share a base image; odd ids perturb one cell) go
-    through the real BMP encode→decode→aHash roundtrip, then the
-    simhash combination-banding core finds all pairs within Hamming ≤ 3
-    (pigeonhole-exact recall, so the pair set equals the brute-force
-    filter the oracle computes). (operators/dedup.hash_near_dups +
-    multimodal.image_ahash)."""
-    import hashlib
-
-    import numpy as np
-
-    from edgar_spark.operators.dedup import hash_near_dups
-    from edgar_spark.operators.multimodal import encode_bmp, image_ahash
-
-    docs = _t(spark, sf_dir, "documents")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for t in pdf.itertuples(index=False):
-                d = int(t.doc_id)
-                base = d // 2
-                vals = []
-                for c in range(64):
-                    # md5-derived cell value: no cross-base structure, so
-                    # the only near pairs are the intended 2k/2k+1 ones
-                    v = (
-                        int(
-                            hashlib.md5(f"{base}:{c}".encode()).hexdigest()[
-                                :2
-                            ],
-                            16,
-                        )
-                        % 85
-                    )
-                    if d % 2 == 1 and c == 0:
-                        v += 17
-                    vals.extend([v, v, v])
-                px = np.array(vals, dtype=np.uint8).reshape(8, 8, 3)
-                ids.append(d)
-                payloads.append(encode_bmp(px))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.select("doc_id").mapInPandas(
-        gen, schema="media_id long, payload binary"
-    )
-    hashes = image_ahash(media).withColumnRenamed("media_id", "doc_id")
-    return hash_near_dups(hashes, hash_col="ahash").orderBy("id_a", "id_b")
-
-
-def _phash_near_dups_oracle_sql() -> str:
-    pow2 = (
-        "[" + ",".join(f"CAST({1 << i} AS HUGEINT)" for i in range(64)) + "]"
-    )
-    return f"""
-    WITH cells AS (
-        SELECT doc_id, CAST(i AS INT) AS cell,
-               3 * ((CAST(concat('0x', substr(md5(
-                        concat(CAST(doc_id // 2 AS VARCHAR), ':',
-                               CAST(i AS VARCHAR))), 1, 2)) AS INT) % 85)
-                    + CASE WHEN doc_id % 2 = 1 AND i = 0
-                           THEN 17 ELSE 0 END) AS luma
-        FROM documents
-        CROSS JOIN unnest(generate_series(0, 63)) AS t(i)
-    ), tot AS (
-        SELECT doc_id, SUM(luma) AS total FROM cells GROUP BY doc_id
-    ), bits AS (
-        SELECT c.doc_id, cell,
-               CASE WHEN luma * 64 >= total THEN 1 ELSE 0 END AS b
-        FROM cells c JOIN tot USING (doc_id)
-    ), h AS (
-        SELECT doc_id,
-               CAST(CASE WHEN u >= 9223372036854775808::HUGEINT
-                         THEN u - 18446744073709551616::HUGEINT
-                         ELSE u END AS BIGINT) AS ahash
-        FROM (
-            SELECT doc_id,
-                   SUM(CASE WHEN b = 1 THEN {pow2}[cell + 1]
-                            ELSE CAST(0 AS HUGEINT) END) AS u
-            FROM bits GROUP BY doc_id
-        )
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(bit_count(xor(a.ahash, b.ahash)) AS INT) AS hamming
-    FROM h a JOIN h b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.ahash, b.ahash)) <= 3
-    ORDER BY id_a, id_b"""
-
-
-_QUERIES["phash_near_dups"] = q_phash_near_dups
-_ORACLES["phash_near_dups"] = _phash_near_dups_oracle_sql()
-
-
-def q_mm_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG decode end-to-end through the stdlib-zlib codec: each
-    document's leading codepoints (mod 256) become the pixels of an 8×4
-    PNG whose color type rotates on doc_id % 3 — RGB (96 values), 8-bit
-    grayscale (32), and RGBA (128; alpha dropped on decode) — serialized
-    with encode_png (whose y%5 row filters make every 8-row image
-    exercise ALL FIVE scanline filters: None/Sub/Up/Average/Paeth) and
-    decoded back by the pure zlib+numpy unfilter chain inside
-    image_stats. The oracle recomputes the expected means straight from
-    the text codepoints per color mode, so a filter-algebra, channel-
-    order, alpha-handling, or gray-replication bug in either codec half
-    cannot pass (operators/multimodal.encode_png/_decode_png)."""
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import encode_png, image_stats
-
-    docs = _t(spark, sf_dir, "documents")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for t in pdf.itertuples(index=False):
-                s = t.text or ""
-                mode = t.doc_id % 3
-                n = {0: 96, 1: 32, 2: 128}[mode]
-                vals = [
-                    (ord(s[i]) % 256) if i < len(s) else 0 for i in range(n)
-                ]
-                a = np.array(vals, dtype=np.uint8)
-                px = (
-                    a.reshape(8, 4, 3)
-                    if mode == 0
-                    else (a.reshape(8, 4) if mode == 1 else a.reshape(8, 4, 4))
-                )
-                ids.append(t.doc_id)
-                payloads.append(encode_png(px))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.select("doc_id", "text").mapInPandas(
-        gen, schema="media_id long, payload binary"
-    )
-    return (
-        image_stats(media)
-        .withColumnRenamed("media_id", "doc_id")
-        .orderBy("doc_id")
-    )
-
-
-_MM_PNG_STATS_ORACLE = """
-    WITH m AS (
-        SELECT doc_id, CAST(doc_id % 3 AS INT) AS mode,
-               CASE CAST(doc_id % 3 AS INT)
-                    WHEN 0 THEN 96 WHEN 1 THEN 32 ELSE 128 END AS n,
-               text
-        FROM documents
-    ), px AS (
-        SELECT doc_id, mode,
-               list_transform(range(n),
-                   i -> CASE WHEN i < length(text)
-                             THEN ascii(substr(text, CAST(i AS INT) + 1, 1))
-                                  % 256
-                             ELSE 0 END) AS v
-        FROM m
-    )
-    SELECT doc_id, 4 AS width, 8 AS height,
-           CASE mode
-               WHEN 0 THEN round(list_sum(v) / 96.0, 6)
-               WHEN 1 THEN round(list_sum(v) / 32.0, 6)
-               ELSE round(list_sum(list_transform(range(32),
-                        k -> v[k*4 + 1] + v[k*4 + 2] + v[k*4 + 3])) / 96.0, 6)
-           END AS mean_all,
-           CASE mode
-               WHEN 0 THEN round(list_sum(list_transform(range(32),
-                        k -> v[k*3 + 3])) / 32.0, 6)
-               WHEN 1 THEN round(list_sum(v) / 32.0, 6)
-               ELSE round(list_sum(list_transform(range(32),
-                        k -> v[k*4 + 3])) / 32.0, 6)
-           END AS mean_b
-    FROM px ORDER BY doc_id"""
-
-
-_QUERIES["mm_png_stats"] = q_mm_png_stats
-_ORACLES["mm_png_stats"] = _MM_PNG_STATS_ORACLE
-
-
-def _mm_jpeg_media(docs: DataFrame, tile_px: int, rgb: str, **enc) -> DataFrame:
-    """Shared constant-block image generator behind the three JPEG keys
-    (baseline / progressive / 4:2:0): each document's first 6 codepoints
-    become six CONSTANT ``tile_px``×``tile_px`` tiles of a 2×3-tile
-    image, encoded by the from-scratch codec with ``enc`` kwargs.
-    ``rgb='odd'`` promotes odd doc_ids to r=g=b RGB (gray otherwise);
-    ``rgb='all'`` promotes every image. ONE definition — the `vals`
-    derivation here is what the shared oracles' integer means replay, so
-    the three keys cannot silently diverge."""
-    import numpy as np
-
-    from edgar_spark.operators.jpeg import encode_jpeg
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for t in pdf.itertuples(index=False):
-                s = t.text or ""
-                vals = [
-                    (ord(s[i]) % 256) if i < len(s) else 0 for i in range(6)
-                ]
-                tiles = np.array(vals, dtype=np.uint8).reshape(2, 3)
-                px = np.repeat(
-                    np.repeat(tiles, tile_px, axis=0), tile_px, axis=1
-                )
-                if rgb == "all" or (rgb == "odd" and t.doc_id % 2 == 1):
-                    px = np.repeat(px[:, :, None], 3, axis=2)
-                ids.append(t.doc_id)
-                payloads.append(encode_jpeg(px, quality=100, **enc))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return docs.select("doc_id", "text").mapInPandas(
-        gen, schema="media_id long, payload binary"
-    )
-
-
-def q_mm_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline-JPEG decode end-to-end through the stdlib+numpy
-    codec (operators/jpeg.py — markers, Annex K Huffman, bit stuffing,
-    zigzag, FDCT/IDCT, quantization): each document's first 6 codepoints
-    become the six CONSTANT 8×8 blocks of a 16×24 image — grayscale
-    1-component JPEG for even doc_ids, RGB 4:4:4 with r=g=b for odd —
-    encoded at quality 100 (all-ones quantization per the IJG formula)
-    and decoded back by image_stats. A constant block has only DC energy
-    and this DC chain is exactly value-preserving for these inputs
-    (every floor sits ≥0.5 from its boundary: 8·(v−128) is an integer
-    for gray, and the r=g=b chroma weights sum to exactly 0.5 in
-    decimal, so Cb/Cr quantize to dead zero) — the roundtrip is the
-    IDENTITY and the oracle is plain integer means of the source
-    codepoints. Any drift anywhere in the JPEG pipeline breaks the
-    identity and hash-fails."""
-    from edgar_spark.operators.multimodal import image_stats
-
-    media = _mm_jpeg_media(
-        _t(spark, sf_dir, "documents"), tile_px=8, rgb="odd"
-    )
-    return (
-        image_stats(media)
-        .withColumnRenamed("media_id", "doc_id")
-        .orderBy("doc_id")
-    )
-
-
-_MM_JPEG_STATS_ORACLE = """
-    WITH px AS (
-        SELECT doc_id,
-               list_transform(range(6),
-                   i -> CASE WHEN i < length(text)
-                             THEN ascii(substr(text, CAST(i AS INT) + 1, 1))
-                                  % 256
-                             ELSE 0 END) AS v
-        FROM documents
-    )
-    SELECT doc_id, 24 AS width, 16 AS height,
-           round(list_sum(v) / 6.0, 6) AS mean_all,
-           round(list_sum(v) / 6.0, 6) AS mean_b
-    FROM px ORDER BY doc_id"""
-
-
-_QUERIES["mm_jpeg_stats"] = q_mm_jpeg_stats
-_ORACLES["mm_jpeg_stats"] = _MM_JPEG_STATS_ORACLE
-
-
-def q_mm_progressive_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL progressive-JPEG decode end-to-end: the same constant-block
-    16×24 images as mm_jpeg_stats, but encoded as SOF2 with the libjpeg
-    default scan script (DC at Al=1 + refinement bit, AC spectral bands
-    at Al=2/1 + two successive-approximation refinement passes, EOB
-    runs) and decoded through the multi-scan coefficient-accumulation
-    path (operators/jpeg.py _decode_prog_scan). At quality 100 the
-    constant-block DC identity survives every point transform —
-    (dc>>1)<<1 | refinement bit reassembles dc exactly — so the oracle
-    stays the plain integer means of the source codepoints."""
-    from edgar_spark.operators.multimodal import image_stats
-
-    media = _mm_jpeg_media(
-        _t(spark, sf_dir, "documents"), tile_px=8, rgb="odd",
-        progressive=True,
-    )
-    return (
-        image_stats(media)
-        .withColumnRenamed("media_id", "doc_id")
-        .orderBy("doc_id")
-    )
-
-
-_QUERIES["mm_progressive_jpeg_stats"] = q_mm_progressive_jpeg_stats
-_ORACLES["mm_progressive_jpeg_stats"] = _MM_JPEG_STATS_ORACLE
-
-
-def q_mm_jpeg_420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL 4:2:0-subsampled JPEG encode→decode: each document's first 6
-    codepoints become six CONSTANT 16×16 tiles of a 32×48 RGB (r=g=b)
-    image, encoded with 2×2 luma sampling (the encoder's 2×2 box chroma
-    downsample + the decoder's interleaved 4-Y-blocks-per-MCU path and
-    nearest-neighbor upsample). Constant tiles are constant under box
-    downsampling and r=g=b pins Cb/Cr to exactly 128, so the quality-100
-    roundtrip is the identity and the oracle is plain integer means."""
-    from edgar_spark.operators.multimodal import image_stats
-
-    media = _mm_jpeg_media(
-        _t(spark, sf_dir, "documents"), tile_px=16, rgb="all",
-        subsampling="420",
-    )
-    return (
-        image_stats(media)
-        .withColumnRenamed("media_id", "doc_id")
-        .orderBy("doc_id")
-    )
-
-
-_MM_JPEG_420_ORACLE = """
-    WITH px AS (
-        SELECT doc_id,
-               list_transform(range(6),
-                   i -> CASE WHEN i < length(text)
-                             THEN ascii(substr(text, CAST(i AS INT) + 1, 1))
-                                  % 256
-                             ELSE 0 END) AS v
-        FROM documents
-    )
-    SELECT doc_id, 48 AS width, 32 AS height,
-           round(list_sum(v) / 6.0, 6) AS mean_all,
-           round(list_sum(v) / 6.0, 6) AS mean_b
-    FROM px ORDER BY doc_id"""
-
-
-_QUERIES["mm_jpeg_420_stats"] = q_mm_jpeg_420_stats
-_ORACLES["mm_jpeg_420_stats"] = _MM_JPEG_420_ORACLE
-
-
 _SUFFIX_MIN_LEN = 3
 
 
@@ -7086,75 +6439,6 @@ def _frontier_priority_oracle_sql() -> str:
 
 _QUERIES["frontier_priority"] = q_frontier_priority
 _ORACLES["frontier_priority"] = _frontier_priority_oracle_sql()
-
-
-def q_mm_mjpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MJPEG video decode end-to-end: each document becomes a
-    two-frame RIFF/AVI (multimodal.encode_avi_mjpeg) whose frames are
-    quality-100 constant-block grayscale JPEGs — frame 0 from the
-    first six codepoints, frame 1 from the same codepoints shifted by
-    +7 mod 256 — decoded back by the container walk + per-frame JPEG
-    decode in multimodal.mjpeg_stats. The constant-block DC identity
-    makes the whole video roundtrip exact, so the oracle is plain
-    integer arithmetic over the source codepoints; any drift in the
-    RIFF walk, chunk alignment, or the JPEG codec hash-fails."""
-    import numpy as np
-
-    from edgar_spark.operators.jpeg import encode_jpeg
-    from edgar_spark.operators.multimodal import encode_avi_mjpeg, mjpeg_stats
-
-    docs = _t(spark, sf_dir, "documents")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for t in pdf.itertuples(index=False):
-                s = t.text or ""
-                vals = [
-                    (ord(s[i]) % 256) if i < len(s) else 0 for i in range(6)
-                ]
-                frames = []
-                for shift in (0, 7):
-                    tiles = np.array(
-                        [(v + shift) % 256 for v in vals], dtype=np.uint8
-                    ).reshape(2, 3)
-                    px = np.repeat(np.repeat(tiles, 8, axis=0), 8, axis=1)
-                    frames.append(encode_jpeg(px, quality=100))
-                ids.append(t.doc_id)
-                payloads.append(encode_avi_mjpeg(frames, 24, 16))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.select("doc_id", "text").mapInPandas(
-        gen, schema="media_id long, payload binary"
-    )
-    return (
-        mjpeg_stats(media)
-        .withColumnRenamed("media_id", "doc_id")
-        .orderBy("doc_id")
-    )
-
-
-_MM_MJPEG_STATS_ORACLE = """
-    WITH px AS (
-        SELECT doc_id,
-               list_transform(range(6),
-                   i -> CASE WHEN i < length(text)
-                             THEN ascii(substr(text, CAST(i AS INT) + 1, 1))
-                                  % 256
-                             ELSE 0 END) AS v
-        FROM documents
-    )
-    SELECT doc_id, 2 AS n_frames, 24 AS width, 16 AS height,
-           round((list_sum(v)
-                  + list_sum(list_transform(v, x -> (x + 7) % 256)))
-                 / 12.0, 6) AS mean_all
-    FROM px ORDER BY doc_id"""
-
-
-_QUERIES["mm_mjpeg_stats"] = q_mm_mjpeg_stats
-_ORACLES["mm_mjpeg_stats"] = _MM_MJPEG_STATS_ORACLE
 
 
 def q_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,9 +24,8 @@ sniffing (https://encoding.spec.whatwg.org/#determine-the-encoding):
 
 Unknown or unsupported labels fall through to the next source rather
 than erroring; byte errors decode with U+FFFD replacement
-(``errors='replace'``) — one mojibake page must not kill a 100 TB task,
-the same poisoned-input posture as ``multimodal.image_stats``. The
-label table is a deliberately small, documented subset of the WHATWG
+(``errors='replace'``) — one mojibake page must not kill a 100 TB task.
+The label table is a deliberately small, documented subset of the WHATWG
 encoding registry (the long tail falls through to UTF-8).
 
 Decoding needs Python codecs, so ``decode_html`` is an Arrow-batched

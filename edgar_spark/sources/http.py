@@ -2,8 +2,8 @@
 
 A crawl wave lands raw (payload bytes, header text) pairs; before anything
 downstream touches them the engine must decide WHAT each payload is (route
-HTML to the parsers, media to the multimodal lane, junk to the bit bucket)
-and pull the caching/freshness fields (ETag, Last-Modified) that feed
+HTML to the parsers, media and junk away from them) and pull the
+caching/freshness fields (ETag, Last-Modified) that feed
 `frontier.schedule.recrawl_schedule`. The reference never needs either —
 it fetches only known-HTML SEC pages (page.go:21-28) — but an open-web
 frontier without content-type routing parses GIFs as HTML.

@@ -179,6 +179,29 @@ def test_domain_quality_integer_score_reference(spark):
     assert set(out["domain_avg_q_milli"]) == {expect}
 
 
+def test_domain_quality_join_respects_broadcast_threshold(spark):
+    import contextlib
+    import io
+
+    from edgar_spark.operators.oracle_queries import q_domain_quality
+    from tests.conftest import SF_SMOKE
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            q_domain_quality(spark, SF_SMOKE).explain("formatted")
+    finally:
+        spark.conf.set(key, prev)
+    plan = buf.getvalue()
+    # the domain table is unbounded: with broadcasts disabled the join
+    # must plan as a shuffle join, never a hinted broadcast
+    assert "BroadcastHashJoin" not in plan
+    assert "SortMergeJoin" in plan
+
+
 def test_host_template_lines_scoping(spark):
     import pandas as pd
     from edgar_spark.operators.curation import host_template_lines

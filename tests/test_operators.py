@@ -55,391 +55,6 @@ def test_dedup_representatives(docs, spark):
     assert reps[1] == 1 and reps[4] == 4
 
 
-def test_bmp_roundtrip_and_decode():
-    """Handcrafted golden BMP: exact pixel recovery incl. bottom-up rows,
-    BGR order, and the 4-byte row padding (width 3 → 9-byte rows pad to 12)."""
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import decode_image, encode_bmp
-
-    px = np.arange(3 * 2 * 3, dtype=np.uint8).reshape(2, 3, 3)  # distinct bytes
-    payload = encode_bmp(px)
-    assert payload[:2] == b"BM"
-    out = decode_image(payload)
-    assert out.shape == (2, 3, 3)
-    assert (out == px).all()
-    # hand-check one byte: bottom file row holds the TOP image row; pixel
-    # (y=1, x=0) is file row 0, bytes BGR → payload[54] == px[1,0,2] (blue)
-    assert payload[54] == px[1, 0, 2]
-
-
-def test_png_roundtrip_fuzz():
-    """PNG codec fuzz across color types (gray/RGB/RGBA) and sizes: the
-    y%5 encoder filter rotation means any image with ≥5 rows exercises
-    every unfilter path (None/Sub/Up/Average/Paeth)."""
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import decode_image, encode_png
-
-    rng = np.random.RandomState(42)
-    for _ in range(40):
-        h, w = rng.randint(1, 24), rng.randint(1, 24)
-        ch = int(rng.choice([1, 3, 4]))
-        px = rng.randint(0, 256, size=(h, w, ch) if ch > 1 else (h, w)).astype(
-            np.uint8
-        )
-        out = decode_image(encode_png(px))
-        assert out.shape == (h, w, 3)
-        if ch == 1:
-            assert (out == np.repeat(px[:, :, None], 3, axis=2)).all()
-        else:
-            assert (out == (px if ch == 3 else px[:, :, :3])).all()
-
-
-def test_png_filters_match_spec():
-    """The encoder's forward filters reproduce the PNG spec §9 formulas
-    exactly (independent per-pixel recomputation over the decompressed
-    IDAT scanlines) — so roundtrip symmetry cannot hide a mirrored
-    filter-algebra bug in both halves."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import encode_png
-
-    raw = (np.arange(5 * 3, dtype=np.uint8).reshape(5, 3) * 37 % 256).astype(
-        np.uint8
-    )
-    enc = encode_png(raw)
-    pos, idat = 8, b""
-    while pos + 12 <= len(enc):
-        (ln,) = struct.unpack_from(">I", enc, pos)
-        if enc[pos + 4 : pos + 8] == b"IDAT":
-            idat += enc[pos + 8 : pos + 8 + ln]
-        pos += 12 + ln
-    arr = np.frombuffer(zlib.decompress(idat), np.uint8).reshape(5, 4)
-    r = raw.astype(int)
-    for y in range(5):
-        assert arr[y, 0] == y % 5
-        for x in range(3):
-            a = r[y, x - 1] if x > 0 else 0
-            b = r[y - 1, x] if y > 0 else 0
-            c = r[y - 1, x - 1] if x > 0 and y > 0 else 0
-            ft = y % 5
-            if ft == 0:
-                exp = r[y, x]
-            elif ft == 1:
-                exp = r[y, x] - a
-            elif ft == 2:
-                exp = r[y, x] - b
-            elif ft == 3:
-                exp = r[y, x] - (a + b) // 2
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                exp = r[y, x] - pred
-            assert arr[y, x + 1] == exp % 256
-
-
-def test_png_rejects_corrupt_and_unsupported():
-    """CRC mismatch and unsupported variants fail loudly (ValueError /
-    NotImplementedError), never silently return wrong pixels."""
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest
-
-    from edgar_spark.operators.multimodal import (
-        PNG_SIG,
-        _decode_png,
-        encode_png,
-    )
-
-    good = bytearray(encode_png(np.zeros((2, 2), dtype=np.uint8)))
-    good[20] ^= 0xFF
-    with pytest.raises(ValueError, match="CRC"):
-        _decode_png(bytes(good))
-
-    # 16-bit depth is a declared NotImplementedError boundary
-    ihdr = struct.pack(">IIBBBBB", 1, 1, 16, 0, 0, 0, 0)
-    chunk = (
-        struct.pack(">I", len(ihdr))
-        + b"IHDR"
-        + ihdr
-        + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr) & 0xFFFFFFFF)
-    )
-    with pytest.raises(NotImplementedError, match="depth=16"):
-        _decode_png(PNG_SIG + chunk)
-
-
-def test_png_feeds_ahash(spark):
-    """image_ahash consumes PNG payloads through the same decode lane as
-    BMP: identical pixels encoded as BMP and PNG must hash identically."""
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import (
-        encode_bmp,
-        encode_png,
-        image_ahash,
-    )
-
-    px = ((np.arange(8 * 8 * 3).reshape(8, 8, 3) * 7) % 256).astype(np.uint8)
-    rows = [(1, bytearray(encode_bmp(px))), (2, bytearray(encode_png(px)))]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    hashes = {r["media_id"]: r["ahash"] for r in image_ahash(df).collect()}
-    assert hashes[1] == hashes[2]
-
-
-def test_jpeg_constant_block_identity():
-    """Quality-100 constant-8x8-block images roundtrip IDENTICALLY (the
-    mm_jpeg_stats exactness contract): grayscale and r=g=b RGB."""
-    import numpy as np
-
-    from edgar_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    rng = np.random.RandomState(3)
-    blocks = rng.randint(0, 256, size=(2, 3), dtype=np.uint8)
-    px = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1)
-    out = decode_jpeg(encode_jpeg(px, quality=100))
-    assert (out == np.repeat(px[:, :, None], 3, axis=2)).all()
-    rgb = np.repeat(px[:, :, None], 3, axis=2)
-    out = decode_jpeg(encode_jpeg(rgb, quality=100))
-    assert (out == rgb).all()
-
-
-def test_jpeg_lossy_roundtrip_bounded():
-    """q90 roundtrip on a smooth gradient stays within a tight error
-    bound — a channel-order or DCT-scale bug in either half blows it."""
-    import numpy as np
-
-    from edgar_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    img = np.zeros((24, 40, 3), dtype=np.uint8)
-    for c in range(3):
-        img[:, :, c] = np.clip(
-            np.add.outer(np.arange(24) * 4, np.arange(40) * (c + 1)), 0, 255
-        )
-    out = decode_jpeg(encode_jpeg(img, quality=90)).astype(int)
-    assert out.shape == img.shape
-    assert np.abs(out - img.astype(int)).max() <= 4
-    # odd (non-multiple-of-8) dimensions crop back exactly
-    assert decode_jpeg(encode_jpeg(img[:13, :7], 80)).shape == (13, 7, 3)
-
-
-def test_jpeg_decodes_real_world_files():
-    """The decoder handles independently-produced baseline JPEGs (the
-    Spark distribution's mllib sample images, 4:2:0 subsampled) and
-    refuses progressive ones loudly."""
-    import glob
-
-    import numpy as np
-    import pytest
-
-    from edgar_spark.operators.jpeg import decode_jpeg
-
-    files = sorted(
-        glob.glob(
-            "/opt/spark-*/data/mllib/images/origin/kittens/*.jpg"
-        )
-    )
-    if not files:
-        pytest.skip("no sample JPEGs in this environment")
-    img = decode_jpeg(open(files[0], "rb").read())
-    assert img.ndim == 3 and img.shape[2] == 3 and img.shape[0] > 50
-    # photographic structure: strong vertical neighbor correlation
-    y = img.astype(float).mean(axis=2)
-    v = y - y.mean()
-    corr = (v[1:] * v[:-1]).sum() / np.sqrt(
-        (v[1:] ** 2).sum() * (v[:-1] ** 2).sum()
-    )
-    assert corr > 0.5
-
-    # independently-produced PROGRESSIVE files (libjpeg scan scripts,
-    # EOBn runs, successive approximation) decode too; both fixtures are
-    # mostly-white "stripe" photos, so the decode must come back bright
-    prog = sorted(glob.glob("/usr/share/doc/nodejs/*white-stripe.jpg"))
-    for f in prog:
-        img = decode_jpeg(open(f, "rb").read())
-        assert img.ndim == 3 and img.shape[2] == 3
-        assert img.mean() > 200 and img.max() == 255
-
-
-def test_jpeg_decoder_survives_truncation_and_corruption():
-    """Malformed streams (every truncation point, random bit flips) must
-    either decode or raise a TYPED error (ValueError /
-    NotImplementedError / struct.error) — never hang, never IndexError:
-    at 100 TB a poisoned blob must surface as a countable decode
-    failure, not a task crash (image_stats strict=False relies on the
-    exception set)."""
-    import struct
-
-    import numpy as np
-
-    from edgar_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    rng = np.random.RandomState(9)
-    enc = encode_jpeg(
-        rng.randint(0, 256, size=(24, 24, 3), dtype=np.uint8), quality=85
-    )
-    for n in range(2, len(enc), 41):
-        try:
-            assert decode_jpeg(enc[:n]).ndim == 3
-        except (ValueError, NotImplementedError, struct.error):
-            pass
-    for _ in range(150):
-        b = bytearray(enc)
-        b[rng.randint(2, len(b))] ^= 1 << rng.randint(8)
-        try:
-            decode_jpeg(bytes(b))
-        except (ValueError, NotImplementedError, struct.error):
-            pass
-
-
-def test_jpeg_feeds_image_stats(spark):
-    """decode_image routes JPEG payloads: image_stats over a q100
-    constant-block JPEG returns the exact block means."""
-    import numpy as np
-
-    from edgar_spark.operators.jpeg import encode_jpeg
-    from edgar_spark.operators.multimodal import image_stats
-
-    blocks = np.array([[10, 200], [30, 60]], dtype=np.uint8)
-    px = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1)
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_jpeg(px, quality=100)))],
-        "media_id long, payload binary",
-    )
-    r = image_stats(df).collect()[0]
-    assert (r["width"], r["height"]) == (16, 16)
-    assert r["mean_all"] == round((10 + 200 + 30 + 60) / 4.0, 6)
-
-
-def test_wav_decode():
-    import struct
-
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import decode_wav
-
-    samples = np.array([0, 16384, -16384, 32767], dtype="<i2")
-    data = samples.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-    payload = (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    rate, out = decode_wav(payload)
-    assert rate == 8000 and out.shape == (4, 1)
-    assert abs(out[1, 0] - 0.5) < 1e-6 and abs(out[2, 0] + 0.5) < 1e-6
-
-
-def test_extract_features_real_decode(spark):
-    """BMP payloads take the real pixel-feature path (no stub fallback):
-    a solid-red image must yield a red-channel mean of exactly 1.0."""
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import encode_bmp, extract_features
-
-    red = np.zeros((4, 4, 3), dtype=np.uint8)
-    red[:, :, 0] = 255
-    rows = [(1, bytearray(encode_bmp(red))), (2, bytearray(b"\x89PNG-not-decodable"))]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    feats = {r["media_id"]: r["features"] for r in extract_features(df).collect()}
-    assert abs(feats[1][0] - 1.0) < 1e-6  # mean R / 255 == 1.0
-    assert abs(feats[1][1]) < 1e-6  # mean G == 0
-    assert len(feats[2]) == 8  # stub fallback still deterministic
-
-
-def test_image_stats_lenient_mode(spark):
-    """strict=False: a poisoned blob yields NULL stats instead of failing
-    the task; strict=True (default) raises."""
-    import numpy as np
-    import pytest
-
-    from edgar_spark.operators.multimodal import encode_bmp, image_stats
-
-    good = encode_bmp(np.full((2, 2, 3), 9, dtype=np.uint8))
-    rows = [(1, bytearray(good)), (2, bytearray(b"BMgarbage-not-a-real-bmp"))]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r["media_id"]: r for r in image_stats(df, strict=False).collect()}
-    assert out[1]["width"] == 2 and out[1]["mean_all"] == 9.0
-    assert out[2]["width"] is None and out[2]["mean_all"] is None
-    with pytest.raises(Exception):
-        image_stats(df).collect()  # strict default propagates
-
-
-def test_video_frame_sample(spark):
-    """Raw-video frame sampling slices true BINARY frames (arbitrary
-    bytes, not text): every k-th frame's md5 matches Python slicing,
-    trailing partial frames drop, and short payloads yield no rows."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    from edgar_spark.operators.multimodal import video_frame_sample
-
-    rng = np.random.default_rng(7)
-    w, h, bpp = 4, 2, 3
-    fs = w * h * bpp
-    payloads = {
-        1: rng.integers(0, 256, fs * 5 + 7, dtype=np.uint8).tobytes(),  # 5 frames + tail
-        2: rng.integers(0, 256, fs, dtype=np.uint8).tobytes(),  # exactly 1
-        3: b"\x00" * (fs - 1),  # short: no frames
-        4: b"",  # empty
-    }
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "media_id": list(payloads),
-                "payload": list(payloads.values()),
-                "width": w,
-                "height": h,
-            }
-        )
-    )
-    got = {
-        (r["media_id"], r["frame_idx"]): (r["n_frames"], r["frame_md5"])
-        for r in video_frame_sample(df, every_k=2).collect()
-    }
-    expect = {}
-    for mid, p in payloads.items():
-        n = len(p) // fs
-        for i in range(0, n, 2):
-            expect[(mid, i)] = (
-                n,
-                hashlib.md5(p[i * fs : (i + 1) * fs]).hexdigest(),
-            )
-    assert got == expect
-    assert {m for m, _ in got} == {1, 2}  # short/empty payloads: no rows
-
-
-def test_audio_stats(spark):
-    import struct
-
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import audio_stats
-
-    samples = (np.sin(np.linspace(0, 20, 800)) * 16384).astype("<i2")
-    data = samples.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-    payload = (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    df = spark.createDataFrame([(1, bytearray(payload))], "media_id long, payload binary")
-    row = audio_stats(df).collect()[0]
-    assert row["sample_rate"] == 8000 and row["n_frames"] == 800
-    assert row["n_channels"] == 1 and row["duration_ms"] == 100
-    assert 0.2 < row["rms"] < 0.5  # ~0.707 * 0.5 amplitude
-
-
 def test_ngram_jaccard_explicit_pairs(docs, spark):
     """Candidate pairs from any source (LSH buckets, explicit list) — not
     just the consecutive-id special case."""
@@ -758,36 +373,6 @@ def test_text_ops(docs):
     assert fp[1] == fp[2] and fp[1] != fp[3]
 
 
-def test_multimodal_plumbing(spark):
-    from edgar_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        byte_stats,
-        decode_image,
-        extract_features,
-        fake_features,
-        frame_sample_plan,
-    )
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
-
-    media = spark.createDataFrame(
-        [
-            (1, "image", b"\x00\x01\x02\x03" * 100, "image/png", 10, 10, None),
-            (2, "video", b"\xff" * 64, "video/mp4", 64, 48, 3500),
-        ],
-        MEDIA_SCHEMA,
-    )
-    feats = {r["media_id"]: r["features"] for r in extract_features(media).collect()}
-    assert len(feats[1]) == 8
-    assert abs(sum(feats[1]) - 1.0) < 1e-6
-    assert feats[1] == list(fake_features(b"\x00\x01\x02\x03" * 100))  # deterministic
-    stats = {r["media_id"]: r["n_bytes"] for r in byte_stats(media).collect()}
-    assert stats[1] == 400 and stats[2] == 64
-    plan = frame_sample_plan(media.filter("media_id = 2"), every_ms=1000)
-    assert [r["frame_ts_ms"] for r in plan.collect()] == [0, 1000, 2000, 3000]
-
-
 def test_asof_join(spark):
     from datetime import datetime as dt
 
@@ -966,22 +551,6 @@ def test_bucket_cap_equivalence_and_overflow(spark):
     assert sim_big == sim_uncapped
     sim_capped = simhash_near_dups(df, max_hamming=3, bucket_cap=5).collect()
     assert all(r["hamming"] <= 3 for r in sim_capped)  # verify still exact
-
-
-def test_encode_wav_roundtrip():
-    """encode_wav → decode_wav recovers rate, channel shape, and exact
-    sample values (int16/2^15 dyadic rationals are exact in float32)."""
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import decode_wav, encode_wav
-
-    vals = np.array([0, 1, -1, 32767, -32768, 256, -256, 12345], dtype="<i2")
-    rate, samples = decode_wav(encode_wav(vals, rate=44100, n_channels=2))
-    assert rate == 44100
-    assert samples.shape == (4, 2)
-    np.testing.assert_array_equal(
-        (samples * 32768.0).astype("<i2").ravel(), vals
-    )
 
 
 def test_repetition_stats_and_filter(spark):
@@ -1449,35 +1018,6 @@ def test_corpus_shuffle_determinism_and_balance(spark):
     assert shard0_ids != sorted(shard0_ids)
 
 
-def test_jpeg_fill_bytes_and_standalone_markers():
-    """T.81 B.1.1.2 edge cases: 0xFF fill padding before a marker and
-    length-less standalone markers (TEM 0x01) must not derail the
-    segment walk; a non-interleaved baseline SOS must fail LOUD
-    (NotImplementedError), never decode wrong pixels silently."""
-    import numpy as np
-    import pytest
-
-    from edgar_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    px = np.full((8, 8), 130, dtype=np.uint8)
-    payload = encode_jpeg(px, quality=100)
-    # inject fill bytes + a TEM marker right after SOI
-    padded = payload[:2] + b"\xff\xff\xff" + b"\xff\x01" + payload[2:]
-    assert (decode_jpeg(padded) == decode_jpeg(payload)).all()
-
-    # rewrite the SOS of an RGB stream to a single-component scan:
-    # spec-legal non-interleaved baseline, unsupported -> typed error
-    rgb = np.full((8, 8, 3), 99, dtype=np.uint8)
-    data = encode_jpeg(rgb, quality=100)
-    i = data.find(b"\xff\xda")
-    assert i > 0
-    comp0 = data[i + 5 : i + 7]  # (cid, table-sel) of component 1
-    tail_start = data.index(b"\x00\x3f\x00", i) + 3
-    new_sos = b"\xff\xda\x00\x08\x01" + comp0 + b"\x00\x3f\x00"
-    with pytest.raises(NotImplementedError, match="non-interleaved"):
-        decode_jpeg(data[:i] + new_sos + data[tail_start:])
-
-
 def test_warc_octet_content_length_non_ascii(spark):
     """Content-Length is UTF-8 OCTETS (WARC spec): non-ASCII payloads
     roundtrip through write_warc -> parse_warc, and the recorded length
@@ -1583,60 +1123,6 @@ def test_suffix_dup_spans_shifted_repeat_and_abutting_runs(spark):
         (13, 1, 3),
         (14, 2, 6),
     ]
-
-
-def test_jpeg_progressive_roundtrip_matches_baseline():
-    """Progressive encode (SOF2, libjpeg default scan script: DC Al=1 +
-    refinement, AC spectral bands, two successive-approximation passes)
-    must reconstruct the EXACT same pixels as the baseline encode of the
-    same image at the same quality — both carry identical quantized
-    coefficients, so any drift in the multi-scan coefficient assembly
-    (EOB runs, correction bits, point transforms) breaks equality."""
-    import numpy as np
-
-    from edgar_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, (37, 53, 3)).astype(np.uint8)
-    img = (img.astype(float) * 0.3 + 128 * 0.7).astype(np.uint8)
-
-    for kwargs in (
-        {"subsampling": "444"},
-        {"subsampling": "420"},
-    ):
-        base = decode_jpeg(encode_jpeg(img, quality=85, **kwargs))
-        prog = decode_jpeg(
-            encode_jpeg(img, quality=85, progressive=True, **kwargs)
-        )
-        assert np.array_equal(base, prog), kwargs
-    gray = img[:, :, 0]
-    assert np.array_equal(
-        decode_jpeg(encode_jpeg(gray, quality=85)),
-        decode_jpeg(encode_jpeg(gray, quality=85, progressive=True)),
-    )
-    # constant blocks at q100: progressive roundtrip is the IDENTITY
-    px = np.full((16, 24), 130, dtype=np.uint8)
-    assert (decode_jpeg(encode_jpeg(px, 100, progressive=True)) == 130).all()
-
-
-def test_jpeg_420_encoder_roundtrip():
-    """4:2:0 encode: constant 16x16 tiles survive the box chroma
-    downsample + nearest upsample EXACTLY at quality 100; lossy 4:2:0
-    on a smooth gradient stays within the usual JPEG error budget and
-    the odd-dimension crop is honored."""
-    import numpy as np
-
-    from edgar_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    px = np.full((32, 32, 3), 99, dtype=np.uint8)
-    assert (decode_jpeg(encode_jpeg(px, 100, subsampling="420")) == 99).all()
-
-    y, x = np.mgrid[0:33, 0:47]
-    img = np.stack([(y * 3) % 200 + 20, (x * 2) % 180 + 40,
-                    ((x + y) * 2) % 160 + 50], axis=-1).astype(np.uint8)
-    out = decode_jpeg(encode_jpeg(img, quality=90, subsampling="420"))
-    assert out.shape == (33, 47, 3)
-    assert np.abs(out.astype(int) - img.astype(int)).mean() < 12
 
 
 def test_corpus_to_manifest_pipeline(spark):
@@ -1763,109 +1249,6 @@ def test_warc_revisit_records_and_roundtrip(spark):
     assert lens == [0, 5]  # one revisit (bodyless) + one response
     assert by_uri["u/mirror"][0]["content_length"] == 0
     assert by_uri["u/b"][0]["payload"] == "world"
-
-
-def test_avi_mjpeg_container_and_stats(spark):
-    """RIFF/AVI MJPEG roundtrip: frames survive the container exactly
-    (odd-length JPEG payloads exercise word-alignment padding), a
-    non-MJPG fccHandler (H264) raises the declared typed codec boundary,
-    truncation fails loud, and mjpeg_stats(strict=False) turns a
-    poisoned payload into a NULL row instead of a task failure."""
-    import numpy as np
-
-    from edgar_spark.operators.jpeg import decode_jpeg, encode_jpeg
-    from edgar_spark.operators.multimodal import (
-        encode_avi_mjpeg,
-        mjpeg_stats,
-        parse_avi_mjpeg,
-    )
-
-    f = [encode_jpeg(np.full((16, 24), v, dtype=np.uint8), 100)
-         for v in (50, 130, 222)]
-    # force an odd-length frame so the pad path really runs
-    odd = next((x for x in f if len(x) % 2 == 1), None)
-    assert odd is not None, [len(x) % 2 for x in f]
-    avi = encode_avi_mjpeg(f, 24, 16)
-    back = parse_avi_mjpeg(avi)
-    assert back == f, [len(x) % 2 for x in f]
-    assert [int(round(float(decode_jpeg(x).mean()))) for x in back] == [
-        50, 130, 222]
-
-    import struct as _struct
-
-    import pytest as _pytest
-
-    with _pytest.raises(NotImplementedError):
-        parse_avi_mjpeg(avi.replace(b"vidsMJPG", b"vidsH264"))
-    with _pytest.raises(ValueError):
-        parse_avi_mjpeg(avi[: len(avi) // 2])
-
-    # the AVIF_HASINDEX flag is backed by a real idx1: one 16-byte
-    # keyframe entry per frame, offsets pointing at each 00dc fourcc
-    from edgar_spark.operators.multimodal import _riff_chunk, _riff_list
-
-    assert avi.count(b"idx1") == 1
-    i1 = avi.index(b"idx1")
-    entries = avi[i1 + 8 : i1 + 8 + _struct.unpack("<I", avi[i1 + 4 : i1 + 8])[0]]
-    assert len(entries) == 16 * 3
-    movi_at = avi.index(b"movi")
-    for k in range(3):
-        cc, flags, off, sz = _struct.unpack("<4sIII", entries[16 * k : 16 * k + 16])
-        assert (cc, flags, sz) == (b"00dc", 0x10, len(f[k]))
-        assert avi[movi_at + off : movi_at + off + 4] == b"00dc"
-
-    # audio-first layout: video is stream 1 (01dc), frames inside a
-    # classic 'rec ' interleave LIST plus one at movi top level
-    hdrl2 = _riff_list(
-        b"hdrl",
-        _riff_chunk(b"avih", b"\x00" * 56)
-        + _riff_list(b"strl", _riff_chunk(b"strh", b"auds" + b"\x00" * 52))
-        + _riff_list(
-            b"strl", _riff_chunk(b"strh", b"vids" + b"MJPG" + b"\x00" * 48)
-        ),
-    )
-    movi2 = _riff_list(
-        b"movi",
-        _riff_list(
-            b"rec ",
-            _riff_chunk(b"00wb", b"\x00\x00") + _riff_chunk(b"01dc", f[0]),
-        )
-        + _riff_chunk(b"01dc", f[1]),
-    )
-    body2 = b"AVI " + hdrl2 + movi2
-    avi2 = b"RIFF" + _struct.pack("<I", len(body2)) + body2
-    assert parse_avi_mjpeg(avi2) == [f[0], f[1]]
-
-    # MJPG stream 0 + a second non-MJPG video track: stream 0 decodes,
-    # the foreign track's chunks are ignored (no NotImplementedError)
-    hdrl3 = _riff_list(
-        b"hdrl",
-        _riff_chunk(b"avih", b"\x00" * 56)
-        + _riff_list(
-            b"strl", _riff_chunk(b"strh", b"vids" + b"MJPG" + b"\x00" * 48)
-        )
-        + _riff_list(
-            b"strl", _riff_chunk(b"strh", b"vids" + b"H264" + b"\x00" * 48)
-        ),
-    )
-    movi3 = _riff_list(
-        b"movi", _riff_chunk(b"00dc", f[2]) + _riff_chunk(b"01dc", b"xx")
-    )
-    body3 = b"AVI " + hdrl3 + movi3
-    avi3 = b"RIFF" + _struct.pack("<I", len(body3)) + body3
-    assert parse_avi_mjpeg(avi3) == [f[2]]
-
-    df = spark.createDataFrame(
-        [(1, bytearray(avi)), (2, bytearray(b"RIFFjunk")), (3, None)],
-        "media_id long, payload binary",
-    )
-    rows = {r["media_id"]: r for r in
-            mjpeg_stats(df, strict=False).collect()}
-    r = rows[1]
-    assert (r["n_frames"], r["width"], r["height"]) == (3, 24, 16)
-    assert abs(r["mean_all"] - (50 + 130 + 222) / 3) < 1e-6
-    assert rows[2]["n_frames"] is None
-    assert rows[3]["n_frames"] is None  # NULL payload = poisoned, not fatal
 
 
 def test_line_lang_mix(spark):

@@ -230,40 +230,3 @@ def test_minhash_coeffs_deterministic():
     assert (a1 >= 1).all() and (a1 < MINHASH_P).all()
     assert (b1 < MINHASH_P).all()
     assert len(np.unique(a1)) > 60  # no degenerate collapse
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=9),
-    st.integers(min_value=1, max_value=6),
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-def test_bmp_roundtrip_any_shape(w, h, seed):
-    """encode→decode is the identity for every width (exercises all four
-    4-byte row-padding phases) and any pixel content."""
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import decode_image, encode_bmp
-
-    rng = np.random.default_rng(seed)
-    px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-    out = decode_image(encode_bmp(px))
-    assert out.shape == (h, w, 3) and (out == px).all()
-
-
-def test_bmp_32bpp_and_topdown():
-    """Hand-built 32-bpp and top-down (negative height) BMP variants."""
-    import struct
-
-    import numpy as np
-
-    from edgar_spark.operators.multimodal import decode_image
-
-    # 2x1, 32bpp BGRA, top-down (height = -1): pixels (r,g,b) = (1,2,3), (4,5,6)
-    body = bytes([3, 2, 1, 255, 6, 5, 4, 255])  # BGRA, stride 8 (no pad)
-    header = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(body), 0, 0, 54)
-    info = struct.pack("<IiiHHIIiiII", 40, 2, -1, 1, 32, 0, len(body), 0, 0, 0, 0)
-    out = decode_image(header + info + body)
-    assert out.shape == (1, 2, 3)
-    assert (out[0, 0] == np.array([1, 2, 3])).all()
-    assert (out[0, 1] == np.array([4, 5, 6])).all()

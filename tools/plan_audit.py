@@ -161,12 +161,6 @@ AUDITS = {
     "warc_wet_pipeline": ["MapInPandas", "!Join"],
     # random projection: literal matrix lives in the plan — map-only
     "rp_project": ["Project", "!Join", "!HashAggregate"],
-    # perceptual hash: encode + decode are Arrow passes, no shuffle
-    "mm_phash": ["MapInPandas", "!Join", "!HashAggregate"],
-    # progressive / 4:2:0 JPEG: encode + multi-scan decode are Arrow
-    # passes over the scan — no shuffle, no join
-    "mm_progressive_jpeg_stats": ["MapInPandas", "!Join"],
-    "mm_jpeg_420_stats": ["MapInPandas", "!Join"],
     # suffix-array span dedup: the doubling rounds sit behind per-round
     # localCheckpoints (the materialization that keeps plan size linear
     # in rounds), so the audited final plan starts at the pinned rank
@@ -184,9 +178,6 @@ AUDITS = {
     # build + earlier rounds sit behind eager localCheckpoints (their
     # GEMM/window shape is asserted by the build's own plan, below)
     "hnsw_topk": ["WindowGroupLimit"],
-    # visual near-dups: banding equality joins on chunk keys — never a
-    # cross join; verification is bit_count on candidates only
-    "phash_near_dups": ["MapInPandas", "!BroadcastNestedLoopJoin"],
     # host rollup: lang scoring fuses into the scan; one partial-agged
     # groupBy(host) (count-distinct expands it, still no join)
     "host_stats": ["HashAggregate", "!Join"],
@@ -208,10 +199,6 @@ AUDITS = {
     # WARC writer→reader roundtrip: per-file collect_list agg, then the
     # Arrow record walk
     "warc_roundtrip": ["MapInPandas", "HashAggregate", "!Join"],
-    # codec roundtrips: encode + decode are Arrow passes, no shuffle
-    "mm_png_stats": ["MapInPandas", "!Join", "!HashAggregate"],
-    "mm_jpeg_stats": ["MapInPandas", "!Join", "!HashAggregate"],
-    "mm_audio_features": ["MapInPandas", "!Join", "!HashAggregate"],
     # failure backoff: url-keyed agg chain, never a single reducer
     "failure_backoff": ["HashAggregate", "!Exchange SinglePartition"],
     # sitemap index explode: regexp extraction stays in codegen
@@ -253,9 +240,6 @@ AUDITS = {
     # the 16-row host graph — AQE converts those to broadcasts at
     # runtime, so no !SMJ assertion on the initial plan
     "frontier_priority": ["BroadcastHashJoin", "Window"],
-    # MJPEG video: container walk + per-frame JPEG decode in one Arrow
-    # pass — no shuffle, no join
-    "mm_mjpeg_stats": ["MapInPandas", "!Join", "!HashAggregate"],
     # charset decode: synth-page gen + sniff/decode are two fused Arrow
     # passes over the scan — zero shuffle end to end
     "charset_decode": ["MapInPandas", "!Exchange", "!Join", "!HashAggregate"],
