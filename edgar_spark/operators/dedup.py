@@ -982,8 +982,11 @@ def cdc_chunks(
     Plan: codepoints, rolling hashes, and cut positions are nested HOFs
     over the ONE bound text value — the whole chunker fuses into the
     scan projection (O(window) work per char, window=8 constant), then
-    chunks Generate out. Zero Python, zero shuffle; downstream census
-    (`cdc_dup_stats`) owns the keyed aggregation.
+    chunks Generate out. The codepoint array and the cut list are bound
+    too (`text.bind`), so the rolling-hash fold runs once per position
+    although the cut list is named three times. Zero Python, zero
+    shuffle; downstream census (`cdc_dup_stats`) owns the keyed
+    aggregation.
     """
     from edgar_spark.operators.text import bind
 
@@ -1017,15 +1020,17 @@ def cdc_chunks(
                     F.array(n),
                 )
             )
-            return F.zip_with(
-                F.concat(
-                    F.array(F.lit(0)), F.slice(cuts, 1, F.size(cuts) - 1)
-                ),
+            # chunk i spans (cuts[i-1], cuts[i]]
+            return bind(
                 cuts,
-                lambda lo, hi: F.struct(
-                    (hi - lo).alias("chunk_len"),
-                    F.md5(F.substring(t, lo + 1, hi - lo)).alias(
-                        "chunk_hash"
+                lambda cs: F.zip_with(
+                    F.concat(F.array(F.lit(0)), F.slice(cs, 1, F.size(cs) - 1)),
+                    cs,
+                    lambda lo, hi: F.struct(
+                        (hi - lo).alias("chunk_len"),
+                        F.md5(F.substring(t, lo + 1, hi - lo)).alias(
+                            "chunk_hash"
+                        ),
                     ),
                 ),
             )
@@ -1067,8 +1072,9 @@ def cdc_dup_stats(
     is the duplicated-char share — the storage-dedup headline number.
 
     Plan: chunk census is ONE partial-agged groupBy on the 32-hex hash;
-    copy counts join back on the same key (the exchange is reused), then
-    ONE doc-grain aggregate. Hashes shuffle, text never does.
+    copy counts join back on the same key, then ONE doc-grain aggregate.
+    Hashes shuffle, text never does. The chunker itself runs on both
+    sides of the join: neither side's exchange is reused.
     """
     chunks = cdc_chunks(df, id_col, text_col, window, divisor)
     census = chunks.groupBy("chunk_hash").agg(

@@ -1412,6 +1412,38 @@ def test_winnow_fingerprints_reference_guarantee_and_ties(spark):
     assert len(got[4]) == 1 and next(iter(got[4]))[0] == 1
 
 
+def test_winnow_rejects_docs_past_the_packed_position_limit(spark):
+    import pandas as pd
+
+    from edgar_spark.operators.text import winnow_fingerprints
+
+    k = 3
+    # 2^20 + k - 1 tokens = 2^20 grams: one past the 20-bit position field
+    pdf = pd.DataFrame({"doc_id": [1], "text": ["t " * (2**20 + k - 1)]})
+    with pytest.raises(Exception, match="chunk_docs"):
+        winnow_fingerprints(spark.createDataFrame(pdf), k=k).collect()
+
+
+def test_hof_arrays_are_bound_once_in_winnow_and_cdc_plans(spark):
+    # an array named inside a HOF lambda (or named twice) is recomputed
+    # per element unless bound: winnow would hash every gram once per
+    # window, CDC would run its rolling-hash fold once per mention
+    import pandas as pd
+
+    from edgar_spark.operators.dedup import cdc_chunks
+    from edgar_spark.operators.text import winnow_fingerprints
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1], "text": ["a b c d e f g h i j"]})
+    )
+
+    def optimized(d):
+        return d._jdf.queryExecution().optimizedPlan().toString()
+
+    assert optimized(winnow_fingerprints(df)).count("md5(") == 1
+    assert optimized(cdc_chunks(df)).count("aggregate(") == 1
+
+
 def test_cut_spans_overlap_edges_and_passthrough(spark):
     import pandas as pd
 

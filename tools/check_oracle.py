@@ -22,13 +22,20 @@ driver coerced only one side; round 2 shipped 1 red row because
 ``fetchdf()`` turns it into float64 (``807`` vs ``807.0``). The pandas
 pair closes the whole fetch-path class.
 
-Usage: python tools/check_oracle.py [sf_dir] [key ...]
+Usage: python tools/check_oracle.py [sf_dir] [key ...] [--out PATH]
+
+``--out PATH`` records the run as JSON under the sf directory's name
+(``{"sf0.01": {key: {"pass", "spark_rows", "oracle_rows", "problem"}}}``),
+merging into PATH when it already holds other directories' records, so
+one file can carry every scale's result.
 """
 
 from __future__ import annotations
 
+import argparse
 import decimal
 import hashlib
+import json
 import math
 import os
 import sys
@@ -107,8 +114,13 @@ def frame_hash(cols: list[str], rows: list[tuple], coerce_decimal: bool) -> str:
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("keys", nargs="*")
+    ap.add_argument("--out")
+    args = ap.parse_args()
+    sf_dir, only = args.sf_dir, set(args.keys)
+    record = {}
 
     import duckdb
     from pyspark.sql import SparkSession
@@ -139,6 +151,10 @@ def main() -> None:
     for key, fn in qs.items():
         if only and key not in only:
             continue
+        rec = record[key] = {
+            "pass": False, "spark_rows": None, "oracle_rows": None,
+            "problem": None,
+        }
         try:
             sdf = fn(spark, sf_dir)
             s_cols = sdf.columns
@@ -146,10 +162,13 @@ def main() -> None:
             s_pdf = sdf.toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {key:24s} spark error: {e}")
+            rec["problem"] = f"spark error: {e}"
             failures.append(key)
             continue
+        rec["spark_rows"] = len(s_rows)
         if key not in oracles:
             print(f"rows  {key:24s} spark_rows={len(s_rows)} (rows-only, no oracle)")
+            rec["problem"] = "no oracle"
             continue
         try:
             cur = con.execute(oracles[key])
@@ -158,8 +177,10 @@ def main() -> None:
             d_pdf = con.execute(oracles[key]).fetchdf()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {key:24s} duckdb error: {e}")
+            rec["problem"] = f"duckdb error: {e}"
             failures.append(key)
             continue
+        rec["oracle_rows"] = len(d_rows)
         problems = []
         if len(s_rows) != len(d_rows):
             problems.append(f"rows {len(s_rows)} vs {len(d_rows)}")
@@ -179,10 +200,21 @@ def main() -> None:
                 )
         if problems:
             print(f"FAIL  {key:24s} {'; '.join(problems)}")
+            rec["problem"] = "; ".join(problems)
             failures.append(key)
         else:
             print(f"ok    {key:24s} rows={len(s_rows)}")
+            rec["pass"] = True
     spark.stop()
+    if args.out:
+        merged = {}
+        if os.path.exists(args.out):
+            with open(args.out) as fh:
+                merged = json.load(fh)
+        merged[os.path.basename(os.path.normpath(sf_dir))] = record
+        with open(args.out, "w") as fh:
+            json.dump(merged, fh, indent=2, sort_keys=True)
+            fh.write("\n")
     if failures:
         print(f"\n{len(failures)} FAILURES: {failures}")
         sys.exit(1)

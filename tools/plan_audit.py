@@ -330,8 +330,10 @@ AUDITS = {
     # pure codegen projections — no keyed shuffle of the URL table
     "crawl_tiers": ["BroadcastNestedLoopJoin", "Scan parquet", "!SortMergeJoin"],
     # winnowing: split/gram/hash/window-min/distinct all fuse into the
-    # scan projection; fingerprints Generate out — NO shuffle at all
-    "winnow_fingerprints": ["Generate", "!Exchange"],
+    # scan projection; fingerprints Generate out. The contract query's
+    # final orderBy adds a rangepartitioning exchange; the operator
+    # itself must not hash-shuffle
+    "winnow_fingerprints": ["Generate", "!hashpartitioning"],
     # span cut: spans collapse per doc (aggregate) and join back; the
     # per-token coverage test is a projection, not a positional join
     "dedup_cut": ["Generate", "HashAggregate"],
