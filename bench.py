@@ -63,7 +63,7 @@ def crawl_bench(spark, sf: float) -> dict:
     from pyspark.sql import functions as F
 
     from edgar_spark.frontier.crawler import CrawlConfig, Crawler
-    from edgar_spark.operators.udfs import parse_report_pages
+    from edgar_spark.operators.udfs import parse_pages
     from edgar_spark.synth.corpus import build_pages, build_seeds
 
     n_companies = max(4, int(1000 * sf))
@@ -86,9 +86,12 @@ def crawl_bench(spark, sf: float) -> dict:
         pages.filter(F.col("text").contains("defref"))
         .select("url", "text")
         .select(
+            F.lit("report").alias("kind"),
             F.lit("c").alias("cik"),
             F.lit("t").alias("ticker"),
             F.lit("10-K").alias("filing_type"),
+            F.lit(0).alias("seed_seq"),
+            F.lit(0).alias("type_seq"),
             F.lit("2020-01-01").alias("filing_date"),
             F.col("url").alias("accession"),
             F.lit("Ops").alias("doc_type"),
@@ -96,9 +99,9 @@ def crawl_bench(spark, sf: float) -> dict:
         )
     )
     n_rep = rep.count()
-    parse_report_pages(rep.limit(64)).count()  # python-worker warmup
+    parse_pages(rep.limit(64)).count()  # python-worker warmup
     t3 = time.time()
-    parse_report_pages(rep).count()
+    parse_pages(rep).count()
     t4 = time.time()
 
     pages.unpersist()

@@ -11,8 +11,9 @@ wave k:
      the politeness token budget per salted host bucket;
   3. "fetch" = join due URLs against the ``pages`` corpus (no live HTTP in
      this sandbox; on a cluster this stage is the HTTP/WARC reader);
-  4. parse by kind (query → filing links, index → doc links, report → facts)
-     via the Arrow-batched kernels;
+  4. parse: one Arrow-batched kernel over the wave's marker-bearing pages,
+     dispatching on kind (query → filing links, index → doc links, report →
+     facts);
   5. discovered URLs: canonicalize → in-batch dedup (keep best priority) →
      bloom prefilter (definitely-new skips the anti-join) → exact
      ``left_anti`` vs the frontier (byte-exact URL-seen per the rule);
@@ -40,7 +41,7 @@ from __future__ import annotations
 
 import tempfile
 from dataclasses import dataclass, field
-from typing import List, Optional, Tuple
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -56,11 +57,7 @@ from edgar_spark.frontier.robots import split_robots
 from edgar_spark.icelite import IceliteCatalog
 from edgar_spark.model.consolidate import consolidate_facts
 from edgar_spark.model.schemas import FACTS_SCHEMA, FRONTIER_SCHEMA
-from edgar_spark.operators.udfs import (
-    parse_index_pages,
-    parse_query_pages,
-    parse_report_pages,
-)
+from edgar_spark.operators.udfs import facts_of, marker_ok, parse_pages
 
 QUERY_URL_TEMPLATE = (
     "https://www.sec.gov/cgi-bin/browse-edgar?action=getcompany"
@@ -68,6 +65,10 @@ QUERY_URL_TEMPLATE = (
 )  # page.go:13-14 (count=10 ⇒ only the 10 most recent filings are discoverable)
 
 PRIORITY_COLS = ["seed_seq", "type_seq", "date_sort", "doc_seq", "url"]
+
+# waves adding at most this many URLs hash them driver-side (one scan job,
+# no Python stage); larger waves use the distributed position build
+DRIVER_BLOOM_THRESHOLD = 100_000
 
 
 @dataclass
@@ -79,11 +80,6 @@ class CrawlConfig:
     # snapshot file fan-in: small fixed file count at sandbox scale; at 10^10
     # scale this becomes write-partitioning by politeness bucket
     snapshot_partitions: int = 8
-    # parse stages are CPU-bound Python work on byte-small inputs, so AQE's
-    # byte-based coalescing under-parallelizes them (400 MB of HTML is ~7
-    # post-shuffle partitions but hours of tokenizer CPU at scale). None ⇒
-    # 2 × defaultParallelism.
-    parse_partitions: Optional[int] = None
     checkpoint_dir: Optional[str] = None
     # "bloom" (sharded, append-only; the 10^10 scale path) or "cuckoo"
     # (supports delete — enables mark_for_recrawl; sharded like the bloom:
@@ -94,9 +90,6 @@ class CrawlConfig:
     bloom_shards: int = 4
     bloom_bits_per_shard: int = 1 << 22  # ~4 Mbit/shard; size up per SURVEY §7.5
     bloom_hashes: int = 5
-    # waves adding fewer URLs than this hash them driver-side (one scan job,
-    # no Python stage); larger waves use the distributed position build
-    driver_bloom_threshold: int = 100_000
     # nominal wall-clock of one fetch wave, used to turn a robots
     # Crawl-delay into a per-host page budget: budget = window / delay
     wave_window_ms: int = 60_000
@@ -231,58 +224,60 @@ class Crawler:
 
     # ------------------------------------------------------------ one wave
 
-    def _frontier_row(
-        self, df: DataFrame, kind: str, url_col, extra: dict, wave_no: int
-    ) -> DataFrame:
-        url = canonicalize(url_col)
+    def _frontier_row(self, links: DataFrame, wave_no: int) -> DataFrame:
+        """Pending frontier rows for the links ``parse_pages`` found: a query
+        page links filing-index pages (accession read off the viewer URL),
+        an index page links report pages."""
+        url = canonicalize(F.col("link"))
+        from_query = F.col("kind") == "query"
         cols = {
             "url": url,
-            "kind": F.lit(kind),
+            "kind": F.when(from_query, "index").otherwise("report"),
             "cik": F.col("cik"),
             "ticker": F.col("ticker"),
             "filing_type": F.col("filing_type"),
-            "accession": extra["accession"],
-            "filing_date": extra["filing_date"],
-            "doc_type": extra["doc_type"],
+            "accession": F.when(
+                from_query,
+                F.regexp_extract(F.col("link"), r"accession_number=([0-9\-]+)", 1),
+            ).otherwise(F.col("accession")),
+            "filing_date": F.col("filing_date"),
+            "doc_type": F.col("doc_type"),
             "seed_seq": F.col("seed_seq"),
             "type_seq": F.col("type_seq"),
-            "date_sort": extra["date_sort"],
-            "doc_seq": extra["doc_seq"],
+            "date_sort": -F.unix_date(F.to_date(F.col("filing_date"))).cast("long"),
+            "doc_seq": F.col("doc_seq"),
             "state": F.lit("pending"),
             "wave": F.lit(None).cast("int"),
             "wave_added": F.lit(wave_no),
             "host": self._polite_host(url),
             "bucket": politeness_bucket(url, self.cfg.politeness_buckets),
         }
-        return df.select(*[c.alias(n) for n, c in cols.items()])
+        return links.select(*[c.alias(n) for n, c in cols.items()])
 
     def run_wave(
         self,
         frontier: DataFrame,
         facts: DataFrame,
         wave_no: int,
-        pending_kinds: Optional[set] = None,
+        pending_kinds: Dict[str, int],
     ) -> Tuple[DataFrame, DataFrame, dict]:
         """One fetch wave.
 
-        ``pending_kinds`` — the ``kind`` values present among pending
-        frontier rows, as a dict ``{kind: count-or-None}`` or a plain set
-        (known for free from the previous wave's metrics). Parse branches,
-        the candidate dedup window, and the bloom probe are all
-        Python/shuffle stages; skipping the ones that cannot match avoids
-        ~2/3 of the per-wave fixed cost, and the counts size each parse
-        repartition so a 200-page wave doesn't fan out over 64 mostly-empty
-        Python tasks (Python worker fan-out scales with cores, so at high
-        parallelism dead stages/tasks are what kills scaling efficiency)."""
+        ``pending_kinds`` — ``{kind: count}`` of the pending frontier rows
+        (known for free from the previous wave's metrics). A wave with no
+        query or index page pending skips discovery (the candidate dedup
+        window, the seen-filter probe and the anti-join: shuffle stages
+        that could match nothing); one with no report page pending skips
+        the facts write. The total count picks the fetch join and sizes
+        the parse repartition, so a 200-page wave doesn't fan out over 64
+        mostly-empty Python tasks (Python worker fan-out scales with cores,
+        so at high parallelism dead tasks are what kills scaling
+        efficiency)."""
         spark = self.spark
         cfg = self.cfg
-        if pending_kinds is None:
-            kind_counts = {"query": None, "index": None, "report": None}
-        elif isinstance(pending_kinds, dict):
-            kind_counts = pending_kinds
-        else:
-            kind_counts = {k: None for k in pending_kinds}
-        kinds = set(kind_counts)
+        kinds = set(pending_kinds)
+        has_links = bool(kinds & {"query", "index"})
+        n_pending = sum(pending_kinds.values())
         pending = frontier.filter(F.col("state") == "pending")
 
         if self.robots is not None:
@@ -335,17 +330,12 @@ class Crawler:
         # * small wave → broadcast the due side; the corpus never shuffles,
         #   the stream side scales with cores; the miss anti-join
         #   broadcasts the (small, persisted) fetched url set.
-        # * wave beyond broadcast_wave_threshold (or unknown-but-requested
-        #   shuffle) → plain shuffle join on url; with Iceberg
-        #   write-distribution on the pages table this is the bucketed
-        #   sort-merge plan, and the miss anti-join reuses the same url
-        #   partitioning instead of broadcasting millions of rows.
-        known_counts = [v for v in kind_counts.values() if v is not None]
-        est_wave = sum(known_counts) if known_counts else None
+        # * wave beyond broadcast_wave_threshold → plain shuffle join on
+        #   url; with Iceberg write-distribution on the pages table this is
+        #   the bucketed sort-merge plan, and the miss anti-join reuses the
+        #   same url partitioning instead of broadcasting millions of rows.
         fetch_join = (
-            "broadcast"
-            if est_wave is None or est_wave <= cfg.broadcast_wave_threshold
-            else "shuffle"
+            "broadcast" if n_pending <= cfg.broadcast_wave_threshold else "shuffle"
         )
         if fetch_join == "broadcast":
             fetched = (
@@ -363,98 +353,35 @@ class Crawler:
             )
             missing = due.join(fetched.select("url"), "url", "left_anti")
 
-        # parse per kind (Sparser-style cheap prefilters before Python),
-        # gated on the kinds actually pending this wave. Each parse input is
-        # explicitly repartitioned: the tokenizer is CPU-bound, so its
-        # parallelism must track cores, not AQE's bytes-per-partition
-        # target — capped by the known pending count (~64 pages/task keeps
-        # tasks ≳0.3 s instead of scheduling empty Python round-trips).
-        n_parse = cfg.parse_partitions or spark.sparkContext.defaultParallelism * 2
-
-        def parse_parts(count: Optional[int]) -> int:
-            if count is None:
-                return n_parse
-            return max(1, min(n_parse, (count + 63) // 64))
-
-        q_out = (
-            parse_query_pages(
-                fetched.filter(
-                    (F.col("kind") == "query")
-                    & F.col("text").contains("interactiveDataBtn")
-                ).repartition(parse_parts(kind_counts.get("query")))
-            )
-            if "query" in kinds
-            else None
+        # parse: one kernel over every marker-bearing page, whatever its
+        # kind (Sparser-style cheap prefilter before Python). Its input is
+        # explicitly repartitioned: the tokenizer is CPU-bound work on
+        # byte-small inputs, so AQE's byte-based coalescing under-
+        # parallelizes it (400 MB of HTML is ~7 post-shuffle partitions but
+        # hours of tokenizer CPU at scale). Parallelism tracks cores, capped
+        # by the pending count (~64 pages/task keeps tasks ≳0.3 s instead
+        # of scheduling empty Python round-trips).
+        n_parse = max(
+            1, min(spark.sparkContext.defaultParallelism * 2, (n_pending + 63) // 64)
         )
-        ix_out = (
-            parse_index_pages(
-                fetched.filter(
-                    (F.col("kind") == "index") & F.col("text").contains("var reports")
-                ).repartition(parse_parts(kind_counts.get("index")))
-            )
-            if "index" in kinds
-            else None
-        )
+        parsed = parse_pages(fetched.filter(marker_ok()).repartition(n_parse))
+        if has_links and "report" in kinds:
+            # discovery and the facts write both read this wave's parse
+            parsed = parsed.persist()
         new_facts = (
-            parse_report_pages(
-                fetched.filter(
-                    (F.col("kind") == "report") & F.col("text").contains("defref")
-                ).repartition(parse_parts(kind_counts.get("report")))
-            )
-            if "report" in kinds
-            else _empty(spark, FACTS_SCHEMA)
+            facts_of(parsed) if "report" in kinds else _empty(spark, FACTS_SCHEMA)
         )
-
-        cand_parts = []
-        if q_out is not None:
-            cand_parts.append(
-                self._frontier_row(
-                    q_out,
-                    "index",
-                    F.col("viewer_url"),
-                    {
-                        "accession": F.regexp_extract(
-                            F.col("viewer_url"), r"accession_number=([0-9\-]+)", 1
-                        ),
-                        "filing_date": F.col("filing_date"),
-                        "doc_type": F.lit(None).cast("string"),
-                        "date_sort": -F.unix_date(
-                            F.to_date(F.col("filing_date"))
-                        ).cast("long"),
-                        "doc_seq": F.lit(0),
-                    },
-                    wave_no,
-                )
-            )
-        if ix_out is not None:
-            cand_parts.append(
-                self._frontier_row(
-                    ix_out,
-                    "report",
-                    F.col("report_url"),
-                    {
-                        "accession": F.col("accession"),
-                        "filing_date": F.col("filing_date"),
-                        "doc_type": F.col("doc_type"),
-                        "date_sort": -F.unix_date(
-                            F.to_date(F.col("filing_date"))
-                        ).cast("long"),
-                        "doc_seq": F.col("doc_seq"),
-                    },
-                    wave_no,
-                )
-            )
 
         probed = None
-        if not cand_parts:
+        if not has_links:
             # report-only wave: no link-bearing pages, so no discovery
             # machinery at all (no window, no probe, no anti-join)
             n_candidates = n_bloom_passed = 0
             new_rows = _empty(spark, FRONTIER_SCHEMA)
         else:
-            candidates = cand_parts[0]
-            for extra_part in cand_parts[1:]:
-                candidates = candidates.unionByName(extra_part)
+            candidates = self._frontier_row(
+                parsed.filter(F.col("kind") != "report"), wave_no
+            )
 
             # in-batch dedup: best (highest-priority) row per canonical URL
             wd = Window.partitionBy("url").orderBy(
@@ -499,20 +426,13 @@ class Crawler:
                 new_rows = definitely_new.unionByName(confirmed_new)
 
         # parse-failure lineage: a fetched page whose kind-specific marker is
-        # absent never reaches its parser (the Sparser-style prefilter) —
+        # absent never reaches the parser (the Sparser-style prefilter) —
         # count those as parse failures, observed during the write job
-        marker_ok = (
-            ((F.col("kind") == "query") & F.col("text").contains("interactiveDataBtn"))
-            | ((F.col("kind") == "index") & F.col("text").contains("var reports"))
-            | ((F.col("kind") == "report") & F.col("text").contains("defref"))
-        )
+        def _cnt(cond) -> F.Column:
+            return F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0))
+
         p_obs = Observation()
-        fetched_obs = fetched.observe(
-            p_obs,
-            F.coalesce(
-                F.sum(F.when(~marker_ok, 1).otherwise(0)), F.lit(0)
-            ).alias("parse_failures"),
-        )
+        fetched_obs = fetched.observe(p_obs, _cnt(~marker_ok()).alias("parse_failures"))
 
         # state transitions as one broadcast join of a small (url → state)
         # update set against the whole frontier — NOT a many-way union of
@@ -553,9 +473,6 @@ class Crawler:
         # repartition shuffle keeps parsing at full width and only narrows
         # the file fan-in afterwards. All wave metrics ride the write jobs
         # as observe() aggregates — zero extra actions per wave.
-        def _cnt(cond) -> F.Column:
-            return F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0))
-
         pend = F.col("state") == "pending"
         this_wave = F.col("wave") == F.lit(wave_no)
         f_obs = Observation()
@@ -658,7 +575,7 @@ class Crawler:
             new_urls = frontier_next.filter(
                 (F.col("state") == "pending") & (F.col("wave_added") == wave_no)
             ).select("url")
-            if n_new <= cfg.driver_bloom_threshold:
+            if n_new <= DRIVER_BLOOM_THRESHOLD:
                 for r in new_urls.collect():
                     self._bloom.add(r["url"])
             elif isinstance(self._bloom, ShardedBloom):
@@ -676,6 +593,7 @@ class Crawler:
                 self._bloom.add_positions(new_urls, "url")
         if probed is not None:
             probed.unpersist()
+        parsed.unpersist()
         fetched.unpersist()
         return frontier_next, facts_next, metrics
 
@@ -688,7 +606,7 @@ class Crawler:
         # query-URLs driver-side — no distributed build for a few hundred rows
         for row in frontier.select("url").collect():
             self._bloom.add(row["url"])
-        return self._loop(frontier, facts, start_wave=0, metrics=[])
+        return self._loop(frontier, facts, start_wave=0)
 
     @classmethod
     def resume(
@@ -721,7 +639,7 @@ class Crawler:
         else:
             # distributed hashing, driver-side insertion of int pairs only
             self._bloom.add_positions(frontier.select("url"), "url")
-        return self._loop(frontier, facts, start_wave=last_wave + 1, metrics=[])
+        return self._loop(frontier, facts, start_wave=last_wave + 1)
 
     def mark_for_recrawl(self, urls: List[str]) -> None:
         """Flip already-fetched frontier rows back to ``pending`` and purge
@@ -864,14 +782,10 @@ class Crawler:
                 self._bloom.delete(u)
 
     def _loop(
-        self,
-        frontier: DataFrame,
-        facts: DataFrame,
-        start_wave: int,
-        metrics: List[dict],
-        pending_kinds: Optional[set] = None,
+        self, frontier: DataFrame, facts: DataFrame, start_wave: int
     ) -> CrawlResult:
         wave = start_wave
+        metrics: List[dict] = []
         kind_counts = (
             frontier.filter(F.col("state") == "pending")
             .groupBy("kind")
@@ -879,8 +793,7 @@ class Crawler:
             .collect()
         )
         n_pending = sum(r["n"] for r in kind_counts)
-        if pending_kinds is None:
-            pending_kinds = {r["kind"]: r["n"] for r in kind_counts if r["n"] > 0}
+        pending_kinds = {r["kind"]: r["n"] for r in kind_counts if r["n"] > 0}
         while wave < self.cfg.max_waves and n_pending > 0:
             frontier, facts, m = self.run_wave(frontier, facts, wave, pending_kinds)
             metrics.append(m)

@@ -100,20 +100,6 @@ FILINGS_SCHEMA = StructType(
     ]
 )
 
-METRICS_SCHEMA = StructType(
-    [
-        StructField("wave", IntegerType(), False),
-        StructField("fetched", LongType(), True),
-        StructField("missing", LongType(), True),
-        StructField("discovered", LongType(), True),
-        StructField("deduped", LongType(), True),
-        StructField("robots_blocked", LongType(), True),
-        StructField("facts", LongType(), True),
-        StructField("bloom_candidates", LongType(), True),
-        StructField("bloom_passed", LongType(), True),
-    ]
-)
-
 DOC_PRIORITY = {
     "Entity Info": 0,
     "Assets": 1,

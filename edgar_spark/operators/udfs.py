@@ -1,23 +1,28 @@
-"""Arrow-batched parse operators (``mapInPandas`` over page batches).
+"""The Arrow-batched parse kernel (one ``mapInPandas`` over page batches).
 
 One Python tokenizer pass per document, Arrow-batch transfer, no per-row
-Python in the driver loop (input_hint requirement). Each wrapper consumes a
-DataFrame of pages joined with their frontier context and emits exploded rows.
+Python in the driver loop (input_hint requirement). :func:`parse_pages`
+consumes pages joined with their frontier context, picks the parser by each
+row's ``kind`` and emits one tagged-union schema, so a crawl wave runs one
+Python stage whatever mix of kinds it fetched.
 
 Design notes for scale:
 - ``mapInPandas`` keeps the parse in executor-side Python workers; batch size
   is governed by ``spark.sql.execution.arrow.maxRecordsPerBatch``.
 - The expensive pre-filter trick (Sparser-style raw filtering, SURVEY.md §4):
-  callers `.filter` pages on cheap substring predicates *before* these UDFs so
-  Catalyst prunes non-parseable pages without invoking Python.
+  callers ``.filter(marker_ok())`` *before* the kernel so Catalyst prunes
+  non-parseable pages without invoking Python.
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -33,46 +38,33 @@ from edgar_spark.parse.docs import (
     query_page_parse,
 )
 
-_QUERY_OUT = StructType(
+# the substring each kind's parser needs; a page without it yields nothing
+_MARKERS = {"query": "interactiveDataBtn", "index": "var reports", "report": "defref"}
+
+_CONTEXT = [
+    "kind",
+    "cik",
+    "ticker",
+    "filing_type",
+    "seed_seq",
+    "type_seq",
+    "filing_date",
+    "accession",
+    "doc_type",
+]
+
+# Context columns, then the union of the per-kind outputs:
+# * query  → one row per (filing_date → viewer link); accession and doc_type
+#   null, doc_seq 0;
+# * index  → one row per classified doc type, doc_seq in the pinned canonical
+#   order (DOC_PRIORITY), link = the report URL;
+# * report → the row-level fact candidates (seq, fin_type, value) in document
+#   order, doc_seq = the doc type's priority; link null.
+PARSED_SCHEMA = StructType(
     [
-        StructField("ticker", StringType()),
+        StructField("kind", StringType()),
         StructField("cik", StringType()),
-        StructField("filing_type", StringType()),
-        StructField("seed_seq", IntegerType()),
-        StructField("type_seq", IntegerType()),
-        StructField("filing_date", StringType()),
-        StructField("viewer_url", StringType()),
-    ]
-)
-
-
-def parse_query_pages(df: DataFrame) -> DataFrame:
-    """queryPageParser (parser.go:34-53) over query-kind pages.
-
-    Input columns: ticker, cik, filing_type, seed_seq, type_seq, text.
-    Output: one row per (filing_date → viewer_url) entry.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples(index=False):
-                links = query_page_parse(t.text or "", t.filing_type)
-                for date, href in links.items():
-                    rows.append(
-                        (t.ticker, t.cik, t.filing_type, t.seed_seq, t.type_seq, date, href)
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in _QUERY_OUT.fields])
-
-    return df.select(
-        "ticker", "cik", "filing_type", "seed_seq", "type_seq", "text"
-    ).mapInPandas(gen, schema=_QUERY_OUT)
-
-
-_INDEX_OUT = StructType(
-    [
         StructField("ticker", StringType()),
-        StructField("cik", StringType()),
         StructField("filing_type", StringType()),
         StructField("seed_seq", IntegerType()),
         StructField("type_seq", IntegerType()),
@@ -80,66 +72,7 @@ _INDEX_OUT = StructType(
         StructField("accession", StringType()),
         StructField("doc_type", StringType()),
         StructField("doc_seq", IntegerType()),
-        StructField("report_url", StringType()),
-    ]
-)
-
-
-def parse_index_pages(df: DataFrame) -> DataFrame:
-    """filingPageParser + mapReports (parser.go:86-127, reportmap.go:114-169)
-    over filing-index (viewer) pages.
-
-    Input columns: ticker, cik, filing_type, seed_seq, type_seq, filing_date,
-    accession, text. Output: one row per classified doc type, doc_seq in the
-    pinned canonical order (DOC_PRIORITY).
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples(index=False):
-                try:
-                    docs = filing_index_parse(t.text or "", t.filing_type)
-                except (ValueError, IndexError, KeyError):
-                    continue  # Go panics; we record a parse failure (no rows)
-                for doc_type, url in docs.items():
-                    rows.append(
-                        (
-                            t.ticker,
-                            t.cik,
-                            t.filing_type,
-                            t.seed_seq,
-                            t.type_seq,
-                            t.filing_date,
-                            t.accession,
-                            doc_type,
-                            DOC_PRIORITY.get(doc_type, 99),
-                            url,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in _INDEX_OUT.fields])
-
-    return df.select(
-        "ticker",
-        "cik",
-        "filing_type",
-        "seed_seq",
-        "type_seq",
-        "filing_date",
-        "accession",
-        "text",
-    ).mapInPandas(gen, schema=_INDEX_OUT)
-
-
-_FACTS_OUT = StructType(
-    [
-        StructField("cik", StringType()),
-        StructField("ticker", StringType()),
-        StructField("filing_type", StringType()),
-        StructField("filing_date", StringType()),
-        StructField("accession", StringType()),
-        StructField("doc_type", StringType()),
-        StructField("doc_priority", IntegerType()),
+        StructField("link", StringType()),
         StructField("seq", IntegerType()),
         StructField("fin_type", StringType()),
         StructField("value", DoubleType()),
@@ -147,37 +80,66 @@ _FACTS_OUT = StructType(
 )
 
 
-def parse_report_pages(df: DataFrame) -> DataFrame:
-    """finReportParser (parser.go:326-347) over report pages → facts rows.
+def marker_ok() -> Column:
+    """True where a page's text holds its kind's marker (:data:`_MARKERS`)."""
+    kind, text = F.col("kind"), F.col("text")
+    return reduce(
+        operator.or_, [(kind == k) & text.contains(m) for k, m in _MARKERS.items()]
+    )
 
-    Input columns: cik, ticker, filing_type, filing_date, accession, doc_type,
-    text. Output: the FACTS_SCHEMA rows (all row-level candidates in document
-    order; consolidation applies the zero-guard reduction).
+
+def _parse_rows(t) -> Iterator[tuple]:
+    ctx = (t.kind, t.cik, t.ticker, t.filing_type, t.seed_seq, t.type_seq)
+    text = t.text or ""
+    if t.kind == "query":  # queryPageParser (parser.go:34-53)
+        for date, href in query_page_parse(text, t.filing_type).items():
+            yield ctx + (date, None, None, 0, href, None, None, None)
+    elif t.kind == "index":  # filingPageParser + mapReports (parser.go:86-127)
+        try:
+            docs = filing_index_parse(text, t.filing_type)
+        except (ValueError, IndexError, KeyError):
+            # Go panics; here the page yields no rows. It passed marker_ok(),
+            # so the crawl's parse_failures does not count it.
+            return
+        for doc_type, url in docs.items():
+            prio = DOC_PRIORITY.get(doc_type, 99)
+            yield ctx + (t.filing_date, t.accession, doc_type, prio, url, None, None, None)
+    elif t.kind == "report":  # finReportParser (parser.go:326-347)
+        facts, _scales = fin_report_facts(text, t.doc_type)
+        prio = DOC_PRIORITY.get(t.doc_type, 99)
+        for seq, ft, val in facts:
+            yield ctx + (t.filing_date, t.accession, t.doc_type, prio, None, seq, ft, val)
+
+
+def parse_pages(df: DataFrame) -> DataFrame:
+    """Parse every page by its ``kind`` into :data:`PARSED_SCHEMA` rows.
+
+    Input columns: kind, cik, ticker, filing_type, seed_seq, type_seq,
+    filing_date, accession, doc_type, text. Rows of another kind yield
+    nothing. Report rows are all row-level fact candidates; consolidation
+    applies the zero-guard reduction.
     """
+    cols = [f.name for f in PARSED_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for t in pdf.itertuples(index=False):
-                facts, _scales = fin_report_facts(t.text or "", t.doc_type)
-                prio = DOC_PRIORITY.get(t.doc_type, 99)
-                for seq, ft, val in facts:
-                    rows.append(
-                        (
-                            t.cik,
-                            t.ticker,
-                            t.filing_type,
-                            t.filing_date,
-                            t.accession,
-                            t.doc_type,
-                            prio,
-                            seq,
-                            ft,
-                            val,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in _FACTS_OUT.fields])
+            rows = [r for t in pdf.itertuples(index=False) for r in _parse_rows(t)]
+            yield pd.DataFrame(rows, columns=cols)
 
-    return df.select(
-        "cik", "ticker", "filing_type", "filing_date", "accession", "doc_type", "text"
-    ).mapInPandas(gen, schema=_FACTS_OUT)
+    return df.select(*_CONTEXT, "text").mapInPandas(gen, schema=PARSED_SCHEMA)
+
+
+def facts_of(parsed: DataFrame) -> DataFrame:
+    """The FACTS_SCHEMA rows of a :func:`parse_pages` output."""
+    return parsed.filter(F.col("kind") == "report").select(
+        "cik",
+        "ticker",
+        "filing_type",
+        "filing_date",
+        "accession",
+        "doc_type",
+        F.col("doc_seq").alias("doc_priority"),
+        "seq",
+        "fin_type",
+        "value",
+    )

@@ -67,24 +67,25 @@ def stream_pages_ingest(
     max_files_per_trigger: int = 4,
 ):
     """Incremental report-page → facts ingest: readStream over a parquet drop
-    directory, the batch ``parse_report_pages`` kernel, parquet sink with an
+    directory, the batch ``parse_pages`` kernel, parquet sink with an
     ``availableNow`` trigger (drains whatever has landed, then stops — the
     deterministic/testable trigger; swap for processingTime on a live feed).
 
     Returns the finished StreamingQuery (already awaited).
     """
-    from edgar_spark.operators.udfs import parse_report_pages
+    from edgar_spark.operators.udfs import facts_of, marker_ok, parse_pages
 
     src = (
         spark.readStream.schema(PAGES_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(pages_dir)
     )
-    # Sparser-style raw prefilter before Python, same as the batch wave
-    reports = src.filter(
-        (F.col("kind") == "report") & F.col("text").contains("defref")
+    # Sparser-style raw prefilter before Python, same as the batch wave;
+    # report pages carry no crawl-priority context
+    reports = src.filter((F.col("kind") == "report") & marker_ok()).select(
+        "*", *[F.lit(None).cast("int").alias(c) for c in ("seed_seq", "type_seq")]
     )
-    facts = parse_report_pages(reports)
+    facts = facts_of(parse_pages(reports))
     q = (
         facts.writeStream.format("parquet")
         .option("path", out_dir)

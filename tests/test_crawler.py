@@ -488,6 +488,118 @@ def test_crawl_delay_budget(spark):
     assert key(capped) == key(free) and len(key(free)) > 0
 
 
+def _expected_filings(n_companies: int, n_filings: int) -> dict:
+    return {
+        (corpus.ticker_of(i), an): corpus.expected_filing(i, an)
+        for i in range(n_companies)
+        for ftype in corpus.FILING_TYPES
+        for an in (
+            corpus.accession_of(i, ftype, d)
+            for d in corpus.filing_dates(ftype, n_filings)
+        )
+    }
+
+
+def _assert_filings_match(res, expected: dict, unchecked=()) -> None:
+    """The crawl's filings are exactly ``expected`` (plus the ``unchecked``
+    keys, whose values are not compared)."""
+    got = {(r["ticker"], r["accession"]): r.asDict() for r in res.filings.collect()}
+    assert set(got) == set(expected) | set(unchecked)
+    for key, exp in expected.items():
+        for col, v in exp.items():
+            want = None if v is None else pytest.approx(v, rel=1e-12)
+            assert got[key][col] == want, (key, col, got[key][col], v)
+
+
+def test_mixed_waves_run_one_parse_kernel(spark, monkeypatch):
+    """A 20 s Crawl-delay (3 pages per wave) spreads each kind's pages over
+    several waves, so waves fetch several kinds at once; every wave still
+    runs exactly one parse kernel, and the crawl gives the same filings."""
+    import pandas as pd
+
+    from edgar_spark.frontier import crawler
+
+    pages = corpus.build_pages(spark, 2, 1)
+    seeds = corpus.build_seeds(spark, 2)
+    robots = spark.createDataFrame(
+        pd.DataFrame(
+            [{"host": "www.sec.gov", "path_prefix": "/", "allowed": True,
+              "crawl_delay_ms": 20_000, "pattern_len": None,
+              "pattern_regex": None}]
+        ),
+        ROBOTS_SCHEMA,
+    )
+    waves = []  # [pending kinds, parse_pages calls] per run_wave
+    parse_pages, run_wave = crawler.parse_pages, Crawler.run_wave
+
+    def counted_parse(df):
+        waves[-1][1] += 1
+        return parse_pages(df)
+
+    def counted_wave(self, frontier, facts, wave_no, pending_kinds):
+        waves.append([set(pending_kinds), 0])
+        return run_wave(self, frontier, facts, wave_no, pending_kinds)
+
+    monkeypatch.setattr(crawler, "parse_pages", counted_parse)
+    monkeypatch.setattr(Crawler, "run_wave", counted_wave)
+    res = Crawler(
+        spark, pages, seeds, robots=robots, config=CrawlConfig(max_waves=40)
+    ).run()
+
+    assert max(m["fetched"] for m in res.metrics) == 3  # the budget binds
+    assert any(len(kinds) >= 2 for kinds, _ in waves)  # mixed waves ran
+    assert [n for _, n in waves] == [1] * len(waves) == [1] * len(res.metrics)
+    _assert_filings_match(res, _expected_filings(2, 1))
+
+
+def test_hostile_pages_counted_as_parse_failures(spark):
+    """A fetched page without its kind's marker is a parse failure: counted
+    in ``parse_failures``, never fatal. An index page that has the marker
+    but is malformed (its parser raises) yields no rows and is not counted.
+    Filings that do not depend on a hostile page are unchanged."""
+    base = corpus.BASE_URL.rstrip("/")
+    cik0 = int(corpus.cik_of(0))
+    k_dates = corpus.filing_dates("10-K", 2)
+    q_date = corpus.filing_dates("10-Q", 2)[0]
+    k0, k1 = (corpus.accession_of(0, "10-K", d) for d in k_dates)
+    q0 = corpus.accession_of(0, "10-Q", q_date)
+
+    def viewer(an):
+        return base + corpus.VIEWER_PATH_FMT.format(cik_int=cik0, an=an)
+
+    blank = "<html><body><table></table></body></html>"
+    hostile = {
+        corpus.QUERY_URL_FMT.format(ticker=corpus.ticker_of(1), ftype="10-Q"): blank,
+        viewer(k0): blank,
+        base
+        + corpus.REPORT_PATH_FMT.format(
+            cik_int=cik0, an18=corpus.an18(q0), n=corpus.R_OPS
+        ): blank,
+        viewer(k1): "<html><script>var reports</script></html>",  # malformed
+    }
+    text = F.col("text")
+    for url, body in hostile.items():
+        text = F.when(F.col("url") == url, body).otherwise(text)
+    pages = corpus.build_pages(spark, 2, 2).withColumn("text", text)
+    assert pages.filter(F.col("url").isin(list(hostile))).count() == len(hostile)
+
+    res = Crawler(
+        spark, pages, corpus.build_seeds(spark, 2), config=CrawlConfig(max_waves=5)
+    ).run()
+
+    assert res.metrics[-1]["pending_next"] == 0
+    assert sum(m["parse_failures"] for m in res.metrics) == 3
+    expected = _expected_filings(2, 2)
+    lost = [(corpus.ticker_of(0), k0), (corpus.ticker_of(0), k1)] + [
+        (corpus.ticker_of(1), corpus.accession_of(1, "10-Q", d))
+        for d in corpus.filing_dates("10-Q", 2)
+    ]
+    damaged = (corpus.ticker_of(0), q0)  # lost its operations report
+    for key in lost + [damaged]:
+        del expected[key]
+    _assert_filings_match(res, expected, unchecked=[damaged])
+
+
 def test_cuckoo_saturated_crawl_equivalent(spark):
     """Correctness under seen-filter overload: a deliberately tiny cuckoo
     filter saturates mid-crawl and degrades to all-maybe-seen; the exact

@@ -102,7 +102,7 @@ def test_sessionize_stream_equals_batch(spark, events, tmp_path):
 
 
 def test_stream_pages_ingest_equals_batch(spark, tmp_path):
-    from edgar_spark.operators.udfs import parse_report_pages
+    from edgar_spark.operators.udfs import facts_of, marker_ok, parse_pages
     from edgar_spark.streaming.pipeline import (
         PAGES_STREAM_SCHEMA,
         stream_pages_ingest,
@@ -133,8 +133,12 @@ def test_stream_pages_ingest_equals_batch(spark, tmp_path):
     stream_pages_ingest(spark, src_dir, out_dir, ckpt, max_files_per_trigger=2)
     streamed = spark.read.parquet(out_dir)
 
-    batch = parse_report_pages(
-        ctx.filter((F.col("kind") == "report") & F.col("text").contains("defref"))
+    batch = facts_of(
+        parse_pages(
+            ctx.filter(marker_ok()).select(
+                "*", F.lit(0).alias("seed_seq"), F.lit(0).alias("type_seq")
+            )
+        )
     )
     b, s = _canon(batch), _canon(streamed)
     assert len(b) > 0
