@@ -33,6 +33,11 @@ def _hash_pair(url: str) -> tuple:
     return int.from_bytes(d[:8], "little"), int.from_bytes(d[8:], "little")
 
 
+# a seen-filter add of at most this many URLs hashes them driver-side (one
+# scan job, no Python stage); larger adds use the filter's distributed build
+DRIVER_ADD_THRESHOLD = 100_000
+
+
 def optimal_bits(n_keys: int, fpp: float) -> int:
     return max(64, int(-n_keys * math.log(fpp) / (math.log(2) ** 2)))
 
@@ -57,9 +62,8 @@ def probe_seen(
     (ContextCleaner unpersists them when the captured references are
     GC'd).
 
-    ``ship="closure"`` keeps the old whole-filter-in-task-closure path —
-    the equivalence reference for tests, and the fallback for filter
-    objects without ``probe_parts()``.
+    ``ship="closure"`` keeps the whole-filter-in-task-closure path — the
+    equivalence reference for tests.
 
     Shared by every seen-filter class so the probe path cannot diverge
     between modes; both paths produce identical flags by construction
@@ -68,7 +72,7 @@ def probe_seen(
 
     schema = StructType(df.schema.fields + [StructField(flag_col, BooleanType())])
 
-    if ship == "broadcast" and hasattr(filt, "probe_parts"):
+    if ship == "broadcast":
         router, parts = filt.probe_parts()
         sc = df.sparkSession.sparkContext
         bcs = [sc.broadcast(p) for p in parts]
@@ -116,8 +120,33 @@ class _BloomShardProber:
         return (_BloomShardProber, (self.arr, self.bits, self.k))
 
 
-class ShardedBloom:
-    def __init__(self, n_shards: int, bits_per_shard: int, n_hashes: int) -> None:
+class _ShardedFilter:
+    """What the crawler uses of a seen-filter: driver-side ``add`` and
+    ``contains``, the Spark ``probe``, and ``add_urls`` — one maintenance
+    call whose driver-side vs distributed choice is the filter's own."""
+
+    def add_urls(self, df, url_col: str = "url", n: int | None = None) -> None:
+        """Add every URL in ``df[url_col]``. ``n`` is the row count when the
+        caller knows it for free: up to ``DRIVER_ADD_THRESHOLD`` the URLs
+        are collected and hashed driver-side; beyond it, or when unknown,
+        the distributed ``add_positions`` runs. Both paths add the same
+        set, so filter contents never depend on which one ran."""
+        if n is not None and n <= DRIVER_ADD_THRESHOLD:
+            for r in df.select(url_col).collect():
+                if r[0] is not None:
+                    self.add(r[0])
+        else:
+            self.add_positions(df, url_col, n_hint=n)
+
+    def probe(self, df, url_col: str, flag_col: str = "maybe_seen"):
+        return probe_seen(self, df, url_col, flag_col)
+
+
+class ShardedBloom(_ShardedFilter):
+    # ~4 Mbit/shard; size up per SURVEY §7.5
+    def __init__(
+        self, n_shards: int = 4, bits_per_shard: int = 1 << 22, n_hashes: int = 5
+    ) -> None:
         self.n_shards = n_shards
         self.bits = bits_per_shard
         self.k = n_hashes
@@ -224,8 +253,13 @@ class ShardedBloom:
             arr[p >> 3] |= 1 << (p & 7)
         return out
 
-    def probe(self, df, url_col: str, flag_col: str = "maybe_seen"):
-        return probe_seen(self, df, url_col, flag_col)
+    def add_positions(
+        self, df, url_col: str = "url", n_hint: int | None = None
+    ) -> None:
+        """Distributed add: ``build`` (positions or bitmaps, picked from
+        ``n_hint``) OR-merged into this filter."""
+        params = (self.n_shards, self.bits, self.k)
+        self.merge(self.build(df, url_col, *params, n_hint=n_hint))
 
     def probe_parts(self):
         """(router, per-shard probers) for broadcast-shipped probing:
@@ -318,34 +352,6 @@ class CuckooFilter:
         self.saturated = True
         return False
 
-    def add_positions(self, df, url_col: str = "url") -> None:
-        """Distributed build: executors compute (bucket, fingerprint) pairs
-        per partition (mapInPandas, same hashes as ``add``); only the small
-        int pairs cross to the driver — never URL strings — and the
-        kick-loop insertion stays driver-side where the table lives. The
-        cuckoo twin of ShardedBloom.build's 'positions' strategy."""
-        n = self.n
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                i1s, fps = [], []
-                for u in pdf[url_col]:
-                    if u is not None:
-                        fp = (zlib.crc32(u.encode("utf-8")) & 0xFFFF) or 1
-                        h, _ = _hash_pair(u)
-                        i1s.append(h % n)
-                        fps.append(fp)
-                yield pd.DataFrame(
-                    {
-                        "i1": np.array(i1s, dtype=np.int64),
-                        "fp": np.array(fps, dtype=np.int64),
-                    }
-                )
-
-        pairs = df.select(url_col).mapInPandas(gen, schema="i1 long, fp long")
-        for row in pairs.collect():
-            self.add_pair(int(row["i1"]), int(row["fp"]))
-
     def contains(self, item: str) -> bool:
         if self.saturated:
             return True  # degraded: exact anti-join downstream decides
@@ -358,18 +364,6 @@ class CuckooFilter:
             or (i1, fp) in self.stash
             or (i2, fp) in self.stash
         )
-
-    def probe(self, df, url_col: str, flag_col: str = "maybe_seen"):
-        return probe_seen(self, df, url_col, flag_col)
-
-    def probe_parts(self):
-        """Single-shard case of the broadcast protocol: one broadcast
-        carrying this filter's table+stash, trivial router."""
-        return (lambda url: 0), [self.contains]
-
-    def add_all(self, urls) -> None:
-        for u in urls:
-            self.add(u)
 
     # -- (de)serialization for the sharded distributed build ----------
     def state_tuple(self) -> tuple:
@@ -407,12 +401,12 @@ _CUCKOO_STATE_SCHEMA = (
 )
 
 
-class ShardedCuckoo:
+class ShardedCuckoo(_ShardedFilter):
     """Sharded cuckoo filter — the deletable URL-seen set at frontier scale.
 
-    A single :class:`CuckooFilter` build funnels one (bucket, fingerprint)
-    pair per URL through the driver, whose kick-loop insertion is a serial
-    bottleneck and whose table is one driver-memory blob. Sharding by an
+    One unsharded :class:`CuckooFilter` would funnel one (bucket,
+    fingerprint) pair per URL through the driver, whose kick-loop insertion
+    is a serial bottleneck, into one driver-memory blob. Sharding by an
     independent url-hash fixes both, mirroring :class:`ShardedBloom`:
 
     * **build/maintenance is distributed** — executors hash URLs to
@@ -456,10 +450,6 @@ class ShardedCuckoo:
     def add(self, item: str) -> bool:
         return self.shards[self._shard(item)].add(item)
 
-    def add_all(self, urls) -> None:
-        for u in urls:
-            self.add(u)
-
     def contains(self, item: str) -> bool:
         return self.shards[self._shard(item)].contains(item)
 
@@ -469,9 +459,6 @@ class ShardedCuckoo:
     @property
     def saturated(self) -> bool:
         return all(s.saturated for s in self.shards)
-
-    def probe(self, df, url_col: str, flag_col: str = "maybe_seen"):
-        return probe_seen(self, df, url_col, flag_col)
 
     def probe_parts(self):
         """(router, per-shard contains closures): part i is shard i's
@@ -510,12 +497,15 @@ class ShardedCuckoo:
 
         return df.select(url_col).mapInPandas(gen, schema="shard int, i1 long, fp long")
 
-    def add_positions(self, df, url_col: str = "url") -> None:
+    def add_positions(
+        self, df, url_col: str = "url", n_hint: int | None = None
+    ) -> None:
         """Distributed incremental insert (the cuckoo twin of the bloom's
-        position build, now with shard-local kick loops): executors hash,
+        position build, with shard-local kick loops): executors hash,
         pairs shuffle once on shard, each shard's insertion runs in one
         task over the shard's CURRENT state, and only the n_shards updated
-        serialized tables come back to the driver."""
+        serialized tables come back to the driver. There is one strategy,
+        so ``n_hint`` is unused."""
         spark = df.sparkSession
         pairs = self._pairs_df(df, url_col)
 
@@ -563,18 +553,3 @@ class ShardedCuckoo:
             self.shards[r["shard"]].load_state(
                 bytes(r["tbl"]), r["stash"], r["saturated"]
             )
-
-    @classmethod
-    def build(
-        cls,
-        df,
-        url_col: str,
-        n_shards: int = 4,
-        n_buckets_per_shard: int = 1 << 16,
-        max_kicks: int = 500,
-        stash_max: int = 512,
-    ) -> "ShardedCuckoo":
-        """Bulk distributed build from an empty filter."""
-        out = cls(n_shards, n_buckets_per_shard, max_kicks, stash_max)
-        out.add_positions(df, url_col)
-        return out

@@ -39,6 +39,7 @@ the bloom is maintained incrementally (only new URLs hashed each wave).
 
 from __future__ import annotations
 
+import dataclasses
 import tempfile
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Tuple
@@ -46,7 +47,7 @@ from typing import Dict, List, Optional, Tuple
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from edgar_spark.frontier.bloom import ShardedBloom
+from edgar_spark.frontier.bloom import ShardedBloom, ShardedCuckoo
 from edgar_spark.frontier.canonical import (
     canonicalize,
     fold_host,
@@ -66,9 +67,20 @@ QUERY_URL_TEMPLATE = (
 
 PRIORITY_COLS = ["seed_seq", "type_seq", "date_sort", "doc_seq", "url"]
 
-# waves adding at most this many URLs hash them driver-side (one scan job,
-# no Python stage); larger waves use the distributed position build
-DRIVER_BLOOM_THRESHOLD = 100_000
+# snapshot file fan-in: small fixed file count at sandbox scale; at 10^10
+# scale this becomes write-partitioning by politeness bucket
+SNAPSHOT_PARTITIONS = 8
+
+# nominal wall-clock of one fetch wave, used to turn a robots Crawl-delay
+# into a per-host page budget: budget = window / delay
+WAVE_WINDOW_MS = 60_000
+
+# due waves up to this size broadcast against the pages corpus (corpus never
+# shuffles); beyond it — e.g. tokens_per_bucket × buckets at full 10^10
+# pressure is 3.2M rows, past safe broadcast size — the fetch flips to a
+# shuffle join on url (with Iceberg write-distribution on the pages table
+# that shuffle is one-sided/bucketed)
+BROADCAST_WAVE_THRESHOLD = 1_000_000
 
 
 @dataclass
@@ -77,22 +89,11 @@ class CrawlConfig:
     politeness_buckets: int = 32
     tokens_per_bucket: int = 100_000
     max_waves: int = 12
-    # snapshot file fan-in: small fixed file count at sandbox scale; at 10^10
-    # scale this becomes write-partitioning by politeness bucket
-    snapshot_partitions: int = 8
     checkpoint_dir: Optional[str] = None
     # "bloom" (sharded, append-only; the 10^10 scale path) or "cuckoo"
-    # (supports delete — enables mark_for_recrawl; sharded like the bloom:
-    # executors hash, kick loops run per-shard in applyInPandas tasks)
+    # (deletable: evict() makes the filter forget a URL, so it can be
+    # re-discovered as new without the exact anti-join)
     seen_filter: str = "bloom"
-    cuckoo_buckets: int = 1 << 16
-    cuckoo_shards: int = 4
-    bloom_shards: int = 4
-    bloom_bits_per_shard: int = 1 << 22  # ~4 Mbit/shard; size up per SURVEY §7.5
-    bloom_hashes: int = 5
-    # nominal wall-clock of one fetch wave, used to turn a robots
-    # Crawl-delay into a per-host page budget: budget = window / delay
-    wave_window_ms: int = 60_000
     # host-alias consolidation (canonical.fold_host): when not None, the
     # frontier's politeness identity strips :port, folds www. onto the
     # apex, and applies these (alias, canonical) pairs — so one origin
@@ -105,12 +106,6 @@ class CrawlConfig:
     # storage without bound otherwise. None = keep everything (full time
     # travel, the test/debug default).
     snapshot_keep: Optional[int] = None
-    # due waves up to this size broadcast against the pages corpus (corpus
-    # never shuffles); beyond it — e.g. tokens_per_bucket × buckets at full
-    # 10^10 pressure is 3.2M rows, past safe broadcast size — the fetch
-    # flips to a shuffle join on url (with Iceberg write-distribution on
-    # the pages table that shuffle is one-sided/bucketed)
-    broadcast_wave_threshold: int = 1_000_000
 
 
 @dataclass
@@ -169,19 +164,9 @@ class Crawler:
             self.cfg.checkpoint_dir or tempfile.mkdtemp(prefix="edgar_spark_ckpt_")
         )
         self._last_metrics: Optional[dict] = None
-        if self.cfg.seen_filter == "cuckoo":
-            from edgar_spark.frontier.bloom import ShardedCuckoo
-
-            self._bloom = ShardedCuckoo(
-                n_shards=self.cfg.cuckoo_shards,
-                n_buckets_per_shard=self.cfg.cuckoo_buckets,
-            )
-        else:
-            self._bloom = ShardedBloom(
-                self.cfg.bloom_shards,
-                self.cfg.bloom_bits_per_shard,
-                self.cfg.bloom_hashes,
-            )
+        self._bloom = (
+            ShardedCuckoo() if self.cfg.seen_filter == "cuckoo" else ShardedBloom()
+        )
 
     # ------------------------------------------------------------ seeding
 
@@ -312,7 +297,7 @@ class Crawler:
         else:
             budget = F.greatest(
                 F.lit(1),
-                F.floor(F.lit(cfg.wave_window_ms) / F.col("_delay_ms")),
+                F.floor(F.lit(WAVE_WINDOW_MS) / F.col("_delay_ms")),
             )
             free_side = base.filter(F.col("_delay_ms").isNull())
             wh = Window.partitionBy("host").orderBy(*PRIORITY_COLS)
@@ -330,12 +315,12 @@ class Crawler:
         # * small wave → broadcast the due side; the corpus never shuffles,
         #   the stream side scales with cores; the miss anti-join
         #   broadcasts the (small, persisted) fetched url set.
-        # * wave beyond broadcast_wave_threshold → plain shuffle join on
+        # * wave beyond BROADCAST_WAVE_THRESHOLD → plain shuffle join on
         #   url; with Iceberg write-distribution on the pages table this is
         #   the bucketed sort-merge plan, and the miss anti-join reuses the
         #   same url partitioning instead of broadcasting millions of rows.
         fetch_join = (
-            "broadcast" if n_pending <= cfg.broadcast_wave_threshold else "shuffle"
+            "broadcast" if n_pending <= BROADCAST_WAVE_THRESHOLD else "shuffle"
         )
         if fetch_join == "broadcast":
             fetched = (
@@ -507,8 +492,7 @@ class Crawler:
             and self._last_metrics is not None
         )
 
-        nsp = cfg.snapshot_partitions
-        tables = {"frontier": frontier_instr.repartition(nsp)}
+        tables = {"frontier": frontier_instr.repartition(SNAPSHOT_PARTITIONS)}
         a_obs = Observation()
         if carry_facts:
             carry = {"facts": prev_facts_path}
@@ -517,7 +501,7 @@ class Crawler:
             facts_instr = facts_next.observe(
                 a_obs, F.count(F.lit(1)).alias("facts")
             )
-            tables["facts"] = facts_instr.repartition(nsp)
+            tables["facts"] = facts_instr.repartition(SNAPSHOT_PARTITIONS)
         self.catalog.commit_snapshot(
             tables,
             carry=carry,
@@ -567,30 +551,13 @@ class Crawler:
         # seen-filter maintenance: add exactly the rows that JOINED the
         # frontier this wave (one fingerprint per row — see the probe
         # comment above), reading them back from the just-written snapshot.
-        # Small waves hash driver-side (one tiny scan); big waves use the
-        # distributed position build (bloom) / int-pair build (cuckoo).
-        # BOTH paths add the same set, so filter contents never depend on
-        # wave size.
+        # The filter picks driver-side or distributed hashing from n_new;
+        # both add the same set, so its contents never depend on wave size.
         if n_new > 0:
             new_urls = frontier_next.filter(
                 (F.col("state") == "pending") & (F.col("wave_added") == wave_no)
             ).select("url")
-            if n_new <= DRIVER_BLOOM_THRESHOLD:
-                for r in new_urls.collect():
-                    self._bloom.add(r["url"])
-            elif isinstance(self._bloom, ShardedBloom):
-                self._bloom.merge(
-                    ShardedBloom.build(
-                        new_urls,
-                        "url",
-                        self.cfg.bloom_shards,
-                        self.cfg.bloom_bits_per_shard,
-                        self.cfg.bloom_hashes,
-                        n_hint=n_new,
-                    )
-                )
-            else:
-                self._bloom.add_positions(new_urls, "url")
+            self._bloom.add_urls(new_urls, n=n_new)
         if probed is not None:
             probed.unpersist()
         parsed.unpersist()
@@ -620,25 +587,16 @@ class Crawler:
     ) -> CrawlResult:
         """EP3 (fetcher.go:35-60): restart from the latest snapshot — parsed
         state is reused, remaining frontier re-drives the waves."""
-        cfg = config or CrawlConfig()
-        cfg.checkpoint_dir = checkpoint_dir
+        # a copy: the caller's config must not come back pointing at this
+        # checkpoint (a later run() with it would commit into this catalog)
+        cfg = dataclasses.replace(
+            config or CrawlConfig(), checkpoint_dir=checkpoint_dir
+        )
         self = cls(spark, pages, seeds, robots, cfg)
         frontier = self.catalog.read(spark, "frontier")
         facts = self.catalog.read(spark, "facts")
         last_wave = self.catalog.snapshot_meta().get("wave", -1)
-        if isinstance(self._bloom, ShardedBloom):
-            self._bloom.merge(
-                ShardedBloom.build(
-                    frontier.select("url"),
-                    "url",
-                    cfg.bloom_shards,
-                    cfg.bloom_bits_per_shard,
-                    cfg.bloom_hashes,
-                )
-            )
-        else:
-            # distributed hashing, driver-side insertion of int pairs only
-            self._bloom.add_positions(frontier.select("url"), "url")
+        self._bloom.add_urls(frontier)
         return self._loop(frontier, facts, start_wave=last_wave + 1)
 
     def mark_for_recrawl(self, urls: List[str]) -> None:
@@ -652,47 +610,49 @@ class Crawler:
 
         Committed as a new snapshot: recrawl is itself a resume point.
         """
+
+        def edit(marked: DataFrame, hit) -> DataFrame:
+            return marked.withColumn(
+                "state", F.when(hit, F.lit("pending")).otherwise(F.col("state"))
+            ).withColumn(
+                "wave", F.when(hit, F.lit(None).cast("int")).otherwise(F.col("wave"))
+            )
+
+        self._purge(urls, edit, {"recrawl": len(urls)})
+
+    def _purge(self, urls: List[str], edit, meta: dict) -> None:
+        """Commit a snapshot whose frontier is ``edit(marked, hit)`` and
+        whose facts lose every (accession, doc_type) the named rows carry.
+        ``marked`` is the frontier left-joined with the broadcast URL list;
+        ``hit`` is true on the rows it names. That one join feeds both the
+        frontier edit and the facts purge."""
+        import pandas as pd
+
         spark = self.spark
         frontier = self.catalog.read(spark, "frontier")
         facts = self.catalog.read(spark, "facts")
-        import pandas as pd
-
-        url_df = spark.createDataFrame(pd.DataFrame({"url": list(urls)}))
-        hit = F.col("url").isin(list(urls)) if len(urls) <= 64 else None
-        if hit is None:
-            marked = frontier.join(
-                F.broadcast(url_df.withColumn("_re", F.lit(1))), "url", "left"
-            )
-            hit = F.col("_re").isNotNull()
-        else:
-            marked = frontier
-        frontier_next = (
-            marked.withColumn(
-                "state", F.when(hit, F.lit("pending")).otherwise(F.col("state"))
-            )
-            .withColumn(
-                "wave", F.when(hit, F.lit(None).cast("int")).otherwise(F.col("wave"))
-            )
-            .drop("_re")
-        )
-        # purge extracted facts of the recrawled documents (replace-on-refetch)
-        keys = frontier.filter(
-            F.col("url").isin(list(urls))
-        ).select("accession", "doc_type").dropDuplicates()
+        # deduplicated, so the left join cannot multiply a frontier row; the
+        # schema is given because an empty list has none to infer
+        url_df = spark.createDataFrame(
+            pd.DataFrame({"url": list(dict.fromkeys(urls))}), "url string"
+        ).withColumn("_hit", F.lit(True))
+        marked = frontier.join(F.broadcast(url_df), "url", "left")
+        hit = F.col("_hit").isNotNull()
+        # replace-on-refetch: the named documents' facts go with them
+        keys = marked.filter(hit).select("accession", "doc_type").dropDuplicates()
         facts_next = facts.join(
             F.broadcast(keys), ["accession", "doc_type"], "left_anti"
         )
-        nsp = self.cfg.snapshot_partitions
         self.catalog.commit_snapshot(
             {
-                "frontier": frontier_next.repartition(nsp),
-                "facts": facts_next.repartition(nsp),
+                "frontier": edit(marked, hit)
+                .drop("_hit")
+                .repartition(SNAPSHOT_PARTITIONS),
+                "facts": facts_next.repartition(SNAPSHOT_PARTITIONS),
             },
-            meta={
-                "wave": self.catalog.snapshot_meta().get("wave", -1),
-                "recrawl": len(urls),
-            },
+            meta={"wave": self.catalog.snapshot_meta().get("wave", -1), **meta},
         )
+
     def recanonicalize(self) -> dict:
         """One-time migration after a canonicalization-rule upgrade: a
         checkpoint written by an older engine stores frontier URLs in the
@@ -728,14 +688,13 @@ class Crawler:
             .drop("_rn")
         )
         n_before = frontier.count()
-        nsp = self.cfg.snapshot_partitions
         # a snapshot with no facts table yet must not carry a null path —
         # catalog.read(spark, "facts") would crash on the next wave instead
         # of failing here (mirrors run_wave's prev_facts_path guard)
         facts_path = self.catalog.table_path("facts")
         carry = {"facts": facts_path} if facts_path is not None else {}
         self.catalog.commit_snapshot(
-            {"frontier": migrated.repartition(nsp)},
+            {"frontier": migrated.repartition(SNAPSHOT_PARTITIONS)},
             meta={
                 "wave": self.catalog.snapshot_meta().get("wave", -1),
                 "recanonicalized": True,
@@ -753,29 +712,8 @@ class Crawler:
         URL; in bloom mode the filter cannot forget, so a re-discovered URL
         stays maybe_seen and costs one exact anti-join pass (correct either
         way — the anti-join no longer finds a frontier row)."""
-        spark = self.spark
-        frontier = self.catalog.read(spark, "frontier")
-        facts = self.catalog.read(spark, "facts")
-        import pandas as pd
-
-        url_df = spark.createDataFrame(pd.DataFrame({"url": list(urls)}))
-        frontier_next = frontier.join(F.broadcast(url_df), "url", "left_anti")
-        keys = frontier.filter(F.col("url").isin(list(urls))).select(
-            "accession", "doc_type"
-        ).dropDuplicates()
-        facts_next = facts.join(
-            F.broadcast(keys), ["accession", "doc_type"], "left_anti"
-        )
-        nsp = self.cfg.snapshot_partitions
-        self.catalog.commit_snapshot(
-            {
-                "frontier": frontier_next.repartition(nsp),
-                "facts": facts_next.repartition(nsp),
-            },
-            meta={
-                "wave": self.catalog.snapshot_meta().get("wave", -1),
-                "evicted": len(urls),
-            },
+        self._purge(
+            urls, lambda marked, hit: marked.filter(~hit), {"evicted": len(urls)}
         )
         if hasattr(self._bloom, "delete"):
             for u in urls:
@@ -801,11 +739,10 @@ class Crawler:
             pending_kinds = m["pending_kind_counts"]
             wave += 1
         filings = consolidate_facts(facts)
-        nsp = self.cfg.snapshot_partitions
 
         # durable lineage: the full per-wave metrics as a table in the final
         # snapshot (Arrow/pandas ⇒ JVM LocalTableScan, one tiny write)
-        final_tables: dict = {"filings": filings.repartition(nsp)}
+        final_tables: dict = {"filings": filings.repartition(SNAPSHOT_PARTITIONS)}
         if metrics:
             import pandas as pd
 
@@ -829,8 +766,8 @@ class Crawler:
                 carry={"frontier": f_path, "facts": a_path},
             )
         else:  # zero waves ran and no prior snapshot exists
-            final_tables["frontier"] = frontier.repartition(nsp)
-            final_tables["facts"] = facts.repartition(nsp)
+            final_tables["frontier"] = frontier.repartition(SNAPSHOT_PARTITIONS)
+            final_tables["facts"] = facts.repartition(SNAPSHOT_PARTITIONS)
             self.catalog.commit_snapshot(
                 final_tables, meta={"wave": wave - 1, "final": True}
             )

@@ -258,9 +258,12 @@ def test_resume_equivalence(spark, tmp_path):
     Crawler(
         spark, pages, seeds, config=CrawlConfig(max_waves=1, checkpoint_dir=interrupted_dir)
     ).run()
+    resume_cfg = CrawlConfig(max_waves=5)
     resumed = Crawler.resume(
-        spark, interrupted_dir, pages, seeds, config=CrawlConfig(max_waves=5)
+        spark, interrupted_dir, pages, seeds, config=resume_cfg
     )
+    # the caller's config is not repointed at the resumed checkpoint
+    assert resume_cfg.checkpoint_dir is None
 
     def norm_filings(df):
         return sorted(
@@ -477,7 +480,7 @@ def test_crawl_delay_budget(spark):
     free = Crawler(spark, pages, seeds, config=CrawlConfig(max_waves=8)).run()
     capped = Crawler(
         spark, pages, seeds, robots=robots,
-        config=CrawlConfig(max_waves=40, wave_window_ms=60_000),
+        config=CrawlConfig(max_waves=40),
     ).run()
 
     budget = 60_000 // 10_000  # 6 pages per wave for the host
@@ -605,7 +608,7 @@ def test_cuckoo_saturated_crawl_equivalent(spark):
     filter saturates mid-crawl and degrades to all-maybe-seen; the exact
     anti-join must then carry membership truth, producing the identical
     crawl result as bloom mode."""
-    from edgar_spark.frontier.bloom import CuckooFilter
+    from edgar_spark.frontier.bloom import ShardedCuckoo
     from edgar_spark.frontier.crawler import CrawlConfig, Crawler
     from edgar_spark.synth.corpus import build_pages, build_seeds
 
@@ -625,7 +628,9 @@ def test_cuckoo_saturated_crawl_equivalent(spark):
     c = Crawler(
         spark, pages, seeds, config=CrawlConfig(max_waves=4, seen_filter="cuckoo")
     )
-    c._bloom = CuckooFilter(n_buckets=2, max_kicks=10, stash_max=2)  # 8 slots
+    c._bloom = ShardedCuckoo(  # one shard of 8 slots
+        n_shards=1, n_buckets_per_shard=2, max_kicks=10, stash_max=2
+    )
     res = c.run()
     assert c._bloom.saturated  # the degrade actually engaged
     assert key(res) == key(ref) and len(key(res)) > 0
@@ -635,10 +640,11 @@ def test_cuckoo_saturated_crawl_equivalent(spark):
     assert urls_ref == urls_sat
 
 
-def test_fetch_join_strategy_switch(spark):
-    """Waves beyond broadcast_wave_threshold automatically flip the fetch
+def test_fetch_join_strategy_switch(spark, monkeypatch):
+    """Waves beyond BROADCAST_WAVE_THRESHOLD automatically flip the fetch
     from broadcasting the due side to a shuffle join on url (the 10^10-wave
     plan); the crawl result must be identical under either strategy."""
+    from edgar_spark.frontier import crawler
     from edgar_spark.frontier.crawler import CrawlConfig, Crawler
     from edgar_spark.synth.corpus import build_pages, build_seeds
 
@@ -646,8 +652,8 @@ def test_fetch_join_strategy_switch(spark):
     seeds = build_seeds(spark, 3)
 
     def crawl_with(threshold):
-        cfg = CrawlConfig(max_waves=4, broadcast_wave_threshold=threshold)
-        res = Crawler(spark, pages, seeds, config=cfg).run()
+        monkeypatch.setattr(crawler, "BROADCAST_WAVE_THRESHOLD", threshold)
+        res = Crawler(spark, pages, seeds, config=CrawlConfig(max_waves=4)).run()
         key = sorted(
             (r["ticker"], r["filing_type"], str(r["filing_date"]), r["revenue"])
             for r in res.filings.collect()
@@ -693,6 +699,25 @@ def test_evict_forgets_url(spark, tmp_path):
     assert fr.count() == n_rows_before - len(victims)
     assert fr.filter(F.col("url").isin(victims)).count() == 0
     assert not any(crawler._bloom.contains(u) for u in victims)  # forgotten
+
+
+def test_purge_of_no_urls_keeps_frontier(spark, tmp_path):
+    """mark_for_recrawl([]) and evict([]) commit snapshots whose frontier
+    is unchanged (an empty URL list has no schema to infer)."""
+    pages = corpus.build_pages(spark, 1, n_filings=1)
+    seeds = corpus.build_seeds(spark, 1)
+    cfg = CrawlConfig(max_waves=0, checkpoint_dir=str(tmp_path / "ck"))
+    crawler = Crawler(spark, pages, seeds, config=cfg)
+    crawler.run()
+
+    def rows():
+        return sorted(map(tuple, crawler.catalog.read(spark, "frontier").collect()))
+
+    before = rows()
+    assert before
+    crawler.mark_for_recrawl([])
+    crawler.evict([])
+    assert rows() == before
 
 
 def test_golden_10k_filing_assembled(crawl):
@@ -805,7 +830,6 @@ def test_host_alias_merges_politeness_budget(spark):
         spark, pages, seeds, robots=robots,
         config=CrawlConfig(
             max_waves=40,
-            wave_window_ms=60_000,
             host_aliases=(("sec.gov", "edgar.example"),),
         ),
     ).run()
@@ -822,6 +846,7 @@ def test_cuckoo_forced_multi_shard_equivalent(spark, tmp_path):
     tables so URLs really spread across shards (and evictions kick in),
     yet the crawl result is identical to the bloom default — the shard
     split must be a pure layout choice, never a semantic one."""
+    from edgar_spark.frontier.bloom import ShardedCuckoo
     from edgar_spark.frontier.crawler import CrawlConfig, Crawler
     from edgar_spark.synth.corpus import build_pages, build_seeds
 
@@ -834,13 +859,10 @@ def test_cuckoo_forced_multi_shard_equivalent(spark, tmp_path):
     cuckoo_crawler = Crawler(
         spark, pages, seeds,
         config=CrawlConfig(
-            max_waves=4,
-            seen_filter="cuckoo",
-            cuckoo_shards=8,
-            cuckoo_buckets=1 << 8,
-            checkpoint_dir=str(tmp_path / "b"),
+            max_waves=4, seen_filter="cuckoo", checkpoint_dir=str(tmp_path / "b")
         ),
     )
+    cuckoo_crawler._bloom = ShardedCuckoo(8, 1 << 8)
     b = cuckoo_crawler.run()
     key = lambda res: sorted(  # noqa: E731
         (r["ticker"], r["filing_type"], str(r["filing_date"]), r["revenue"])

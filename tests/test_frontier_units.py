@@ -68,15 +68,15 @@ def test_sharded_cuckoo_distributed_build(spark):
     urls = [f"https://www.sec.gov/Archives/edgar/data/{i}/R1.htm" for i in range(2000)]
     df = spark.createDataFrame(pd.DataFrame({"url": urls}))
 
-    built = ShardedCuckoo.build(df.repartition(13), "url", n_shards=4,
-                                n_buckets_per_shard=1 << 12)
+    built = ShardedCuckoo(n_shards=4, n_buckets_per_shard=1 << 12)
+    built.add_positions(df.repartition(13), "url")
     assert all(built.contains(u) for u in urls)  # no false negatives
     fresh = [f"https://www.sec.gov/other/{i}" for i in range(2000)]
     assert sum(built.contains(u) for u in fresh) / len(fresh) < 0.05
 
     # partitioning-invariant: sorted insertion makes shard tables identical
-    again = ShardedCuckoo.build(df.repartition(1), "url", n_shards=4,
-                                n_buckets_per_shard=1 << 12)
+    again = ShardedCuckoo(n_shards=4, n_buckets_per_shard=1 << 12)
+    again.add_positions(df.repartition(1), "url")
     for s1, s2 in zip(built.shards, again.shards):
         assert (s1.table == s2.table).all()
         assert s1.stash == s2.stash and s1.saturated == s2.saturated
@@ -94,15 +94,11 @@ def test_sharded_cuckoo_distributed_build(spark):
 def test_probe_seen_broadcast_equals_closure(spark):
     """The broadcast-shipped probe path (per-shard sc.broadcast + lazy
     shard-selective fetch) produces flag-for-flag identical output to the
-    whole-filter-in-closure reference path, for all three filter classes."""
+    whole-filter-in-closure reference path, for both seen-filter classes
+    (the sharded cuckoo broadcasts each shard's CuckooFilter.contains)."""
     import pandas as pd
 
-    from edgar_spark.frontier.bloom import (
-        CuckooFilter,
-        ShardedBloom,
-        ShardedCuckoo,
-        probe_seen,
-    )
+    from edgar_spark.frontier.bloom import ShardedBloom, ShardedCuckoo, probe_seen
 
     seen = [
         f"https://www.sec.gov/Archives/edgar/data/{i}/R1.htm"
@@ -112,9 +108,8 @@ def test_probe_seen_broadcast_equals_closure(spark):
     df = spark.createDataFrame(pd.DataFrame({"url": mixed})).repartition(7)
 
     bloom = ShardedBloom(n_shards=4, bits_per_shard=1 << 14, n_hashes=5)
-    cuckoo = CuckooFilter(n_buckets=1 << 12)
     shc = ShardedCuckoo(n_shards=4, n_buckets_per_shard=1 << 12)
-    for f in (bloom, cuckoo, shc):
+    for f in (bloom, shc):
         for u in seen:
             f.add(u)
         assert hasattr(f, "probe_parts")
@@ -137,12 +132,40 @@ def test_sharded_cuckoo_saturation_is_per_shard():
 
     f = ShardedCuckoo(n_shards=4, n_buckets_per_shard=2, stash_max=2)
     urls = [f"u{i}" for i in range(400)]  # ~100 per shard >> 8 slots + 2
-    f.add_all(urls)
+    for u in urls:
+        f.add(u)
     assert all(f.contains(u) for u in urls)
     assert f.saturated  # all four shards overloaded
     f2 = ShardedCuckoo(n_shards=4, n_buckets_per_shard=1 << 10)
-    f2.add_all(urls)
+    for u in urls:
+        f2.add(u)
     assert not f2.saturated
+
+
+def test_seen_filter_contents_independent_of_add_path(spark):
+    """add_urls picks driver-side or distributed hashing from the row count
+    it is given; the filter it leaves must not depend on that choice. The
+    bloom's three paths (driver add, position build, bitmap build) give
+    byte-identical shards; the cuckoo's two paths both hold every URL."""
+    import pandas as pd
+
+    from edgar_spark.frontier.bloom import ShardedCuckoo
+
+    urls = [f"https://www.sec.gov/Archives/edgar/data/{i}/R1.htm" for i in range(600)]
+    df = spark.createDataFrame(pd.DataFrame({"url": urls})).repartition(5)
+
+    blooms = [ShardedBloom(4, 1 << 14, 5) for _ in range(3)]
+    for b, n in zip(blooms, (len(urls), None, 10**9)):  # driver, positions, bitmaps
+        b.add_urls(df, n=n)
+    for other in blooms[1:]:
+        for s1, s2 in zip(blooms[0].shards, other.shards):
+            assert s1.tobytes() == s2.tobytes()
+    assert blooms[0].shards[0].any()
+
+    for n in (len(urls), None):  # driver, distributed
+        c = ShardedCuckoo(n_shards=4, n_buckets_per_shard=1 << 10)
+        c.add_urls(df, n=n)
+        assert all(c.contains(u) for u in urls)
 
 
 def test_canonicalize_and_bucket(spark):
