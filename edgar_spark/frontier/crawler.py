@@ -20,6 +20,11 @@ wave k:
   6. frontier state transitions + append; snapshot commit (icelite) so every
      wave is a resume point; per-wave metrics row.
 
+A crawl starts from a snapshot: ``run()`` commits the seed frontier and an
+empty facts table as its first snapshot, then runs the same wave loop that
+``resume()`` runs from a later snapshot. The final snapshot adds the
+consolidated filings and records every wave's metrics in its meta.
+
 Crawl ordering: priority = (seed_seq, type_seq, date_sort, doc_seq, url) —
 per-ticker seed order, per filing type, filing dates DESC (the reference's
 AvailableFilings order, folder.go:128-131), doc pages in the pinned canonical
@@ -127,6 +132,11 @@ def _observed(obs, key: str, default: int = 0) -> int:
         return int(obs.get[key])
     except Exception:  # noqa: BLE001 — Py4J assertion from the pruned node
         return default
+
+
+def _cnt(cond) -> F.Column:
+    """Observation aggregate: the number of rows where ``cond`` holds."""
+    return F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0))
 
 
 def _empty(spark: SparkSession, schema) -> DataFrame:
@@ -349,13 +359,15 @@ class Crawler:
         n_parse = max(
             1, min(spark.sparkContext.defaultParallelism * 2, (n_pending + 63) // 64)
         )
-        parsed = parse_pages(fetched.filter(marker_ok()).repartition(n_parse))
+        # a page whose parser raised comes back as one row naming the error:
+        # counted as a parse failure, never a link or a fact
+        e_obs = Observation()
+        parsed = parse_pages(fetched.filter(marker_ok()).repartition(n_parse)).observe(
+            e_obs, _cnt(F.col("error").isNotNull()).alias("errors")
+        )
         if has_links and "report" in kinds:
             # discovery and the facts write both read this wave's parse
             parsed = parsed.persist()
-        new_facts = (
-            facts_of(parsed) if "report" in kinds else _empty(spark, FACTS_SCHEMA)
-        )
 
         probed = None
         if not has_links:
@@ -365,7 +377,8 @@ class Crawler:
             new_rows = _empty(spark, FRONTIER_SCHEMA)
         else:
             candidates = self._frontier_row(
-                parsed.filter(F.col("kind") != "report"), wave_no
+                parsed.filter((F.col("kind") != "report") & F.col("error").isNull()),
+                wave_no,
             )
 
             # in-batch dedup: best (highest-priority) row per canonical URL
@@ -413,9 +426,6 @@ class Crawler:
         # parse-failure lineage: a fetched page whose kind-specific marker is
         # absent never reaches the parser (the Sparser-style prefilter) —
         # count those as parse failures, observed during the write job
-        def _cnt(cond) -> F.Column:
-            return F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0))
-
         p_obs = Observation()
         fetched_obs = fetched.observe(p_obs, _cnt(~marker_ok()).alias("parse_failures"))
 
@@ -450,7 +460,6 @@ class Crawler:
             .drop("_new_state")
             .unionByName(new_rows)
         )
-        facts_next = facts.unionByName(new_facts)
 
         # snapshot commit = materialization + resume point. repartition, NOT
         # coalesce: coalesce(n) would collapse the parse lineage (the real
@@ -475,40 +484,24 @@ class Crawler:
             _cnt(pend & (F.col("kind") == "report")).alias("p_report"),
         )
         # a wave with no report pages pending cannot add facts — carry the
-        # previous snapshot's facts files forward (Iceberg shared-manifest
+        # current snapshot's facts table forward (Iceberg shared-manifest
         # pattern) instead of re-writing an unchanged table: one fewer
         # write job + its planning per discovery wave (measured ~0.5-1 s of
         # the per-wave constant at sandbox scale; at 10^10 rows it is a
-        # full-table rewrite avoided). Falls back to writing when there is
-        # no previous facts path (first wave) so every snapshot stays a
-        # complete resume point.
-        # (the _last_metrics guard: right after resume() the previous facts
-        # count is unknown, so the first resumed wave writes — and thereby
-        # re-counts — the table; later waves carry again)
-        prev_facts_path = self.catalog.table_path("facts")
-        carry_facts = (
-            "report" not in kinds
-            and prev_facts_path is not None
-            and self._last_metrics is not None
-        )
-
+        # full-table rewrite avoided). Every crawl starts from a snapshot
+        # (run() commits the seed one), so there is always a table to carry.
         tables = {"frontier": frontier_instr.repartition(SNAPSHOT_PARTITIONS)}
-        a_obs = Observation()
-        if carry_facts:
-            carry = {"facts": prev_facts_path}
-        else:
-            carry = None
-            facts_instr = facts_next.observe(
-                a_obs, F.count(F.lit(1)).alias("facts")
+        if "report" in kinds:
+            tables["facts"] = facts.unionByName(facts_of(parsed)).repartition(
+                SNAPSHOT_PARTITIONS
             )
-            tables["facts"] = facts_instr.repartition(SNAPSHOT_PARTITIONS)
         self.catalog.commit_snapshot(
             tables,
-            carry=carry,
+            carry=[] if "report" in kinds else ["facts"],
             # previous wave's metrics ride the manifest: every snapshot is a
             # resume point AND a lineage record (observations for THIS wave
             # only resolve once these writes run, so they land in the next
-            # commit's meta and in the final metrics table)
+            # commit's meta and in the final snapshot's meta)
             meta={"wave": wave_no, "prev_wave_metrics": self._last_metrics},
         )
         if cfg.snapshot_keep is not None:
@@ -517,11 +510,7 @@ class Crawler:
         facts_next = self.catalog.read(spark, "facts")
 
         fm = f_obs.get
-        n_facts = (
-            int((self._last_metrics or {}).get("facts", 0))
-            if carry_facts
-            else int(a_obs.get["facts"])
-        )
+        n_facts = self.catalog.rows("facts")
         n_new = int(fm["n_new"])
         pending_kinds_next = {
             k: int(fm[f"p_{k}"])
@@ -542,7 +531,8 @@ class Crawler:
             "pending_next": int(fm["pending_next"]),
             "pending_kinds": sorted(pending_kinds_next),
             "pending_kind_counts": pending_kinds_next,
-            "parse_failures": _observed(p_obs, "parse_failures"),
+            "parse_failures": _observed(p_obs, "parse_failures")
+            + _observed(e_obs, "errors"),
         }
         self._last_metrics = {
             k: v for k, v in metrics.items() if k != "pending_kind_counts"
@@ -567,13 +557,17 @@ class Crawler:
     # ------------------------------------------------------------ full runs
 
     def run(self) -> CrawlResult:
-        frontier = self.seed_frontier()
-        facts = _empty(self.spark, FACTS_SCHEMA)
-        # seed list is small by design (a fixed CIK list): hash the seed
-        # query-URLs driver-side — no distributed build for a few hundred rows
-        for row in frontier.select("url").collect():
-            self._bloom.add(row["url"])
-        return self._loop(frontier, facts, start_wave=0)
+        """Commit the seed frontier and an empty facts table as the crawl's
+        first snapshot, then drive the waves from it (as :meth:`resume`
+        does from a later one)."""
+        self.catalog.commit_snapshot(
+            {
+                "frontier": self.seed_frontier(),
+                "facts": _empty(self.spark, FACTS_SCHEMA),
+            },
+            meta={"wave": -1},
+        )
+        return self._loop()
 
     @classmethod
     def resume(
@@ -592,12 +586,7 @@ class Crawler:
         cfg = dataclasses.replace(
             config or CrawlConfig(), checkpoint_dir=checkpoint_dir
         )
-        self = cls(spark, pages, seeds, robots, cfg)
-        frontier = self.catalog.read(spark, "frontier")
-        facts = self.catalog.read(spark, "facts")
-        last_wave = self.catalog.snapshot_meta().get("wave", -1)
-        self._bloom.add_urls(frontier)
-        return self._loop(frontier, facts, start_wave=last_wave + 1)
+        return cls(spark, pages, seeds, robots, cfg)._loop()
 
     def mark_for_recrawl(self, urls: List[str]) -> None:
         """Flip already-fetched frontier rows back to ``pending`` and purge
@@ -687,22 +676,16 @@ class Crawler:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        n_before = frontier.count()
-        # a snapshot with no facts table yet must not carry a null path —
-        # catalog.read(spark, "facts") would crash on the next wave instead
-        # of failing here (mirrors run_wave's prev_facts_path guard)
-        facts_path = self.catalog.table_path("facts")
-        carry = {"facts": facts_path} if facts_path is not None else {}
+        n_before = self.catalog.rows("frontier")
         self.catalog.commit_snapshot(
             {"frontier": migrated.repartition(SNAPSHOT_PARTITIONS)},
             meta={
                 "wave": self.catalog.snapshot_meta().get("wave", -1),
                 "recanonicalized": True,
             },
-            carry=carry,
+            carry=["facts"],
         )
-        n_after = self.catalog.read(spark, "frontier").count()
-        return {"rows_before": n_before, "rows_after": n_after}
+        return {"rows_before": n_before, "rows_after": self.catalog.rows("frontier")}
 
     def evict(self, urls: List[str]) -> None:
         """Remove URLs from the frontier entirely (row + facts + seen-filter
@@ -719,10 +702,17 @@ class Crawler:
             for u in urls:
                 self._bloom.delete(u)
 
-    def _loop(
-        self, frontier: DataFrame, facts: DataFrame, start_wave: int
-    ) -> CrawlResult:
-        wave = start_wave
+    def _loop(self) -> CrawlResult:
+        """Drive waves from the current snapshot until nothing is pending
+        or ``max_waves`` is reached, then commit the consolidated filings
+        as the final snapshot."""
+        spark = self.spark
+        frontier = self.catalog.read(spark, "frontier")
+        facts = self.catalog.read(spark, "facts")
+        wave = self.catalog.snapshot_meta().get("wave", -1) + 1
+        # the seen filter holds one fingerprint per frontier row; a small
+        # frontier (a seed list, say) is hashed driver-side
+        self._bloom.add_urls(frontier, n=self.catalog.rows("frontier"))
         metrics: List[dict] = []
         kind_counts = (
             frontier.filter(F.col("state") == "pending")
@@ -738,42 +728,17 @@ class Crawler:
             n_pending = m["pending_next"]
             pending_kinds = m["pending_kind_counts"]
             wave += 1
-        filings = consolidate_facts(facts)
 
-        # durable lineage: the full per-wave metrics as a table in the final
-        # snapshot (Arrow/pandas ⇒ JVM LocalTableScan, one tiny write)
-        final_tables: dict = {"filings": filings.repartition(SNAPSHOT_PARTITIONS)}
-        if metrics:
-            import pandas as pd
-
-            mpdf = pd.DataFrame(
-                [
-                    {k: v for k, v in m.items() if not isinstance(v, (dict, list))}
-                    for m in metrics
-                ]
-            )
-            final_tables["metrics"] = self.spark.createDataFrame(mpdf).coalesce(1)
-
-        # frontier/facts were materialized by the last wave's commit —
-        # carry their data paths into the final snapshot (Iceberg
-        # shared-manifest pattern) instead of rewriting them
-        f_path = self.catalog.table_path("frontier")
-        a_path = self.catalog.table_path("facts")
-        if f_path and a_path:
-            self.catalog.commit_snapshot(
-                final_tables,
-                meta={"wave": wave - 1, "final": True},
-                carry={"frontier": f_path, "facts": a_path},
-            )
-        else:  # zero waves ran and no prior snapshot exists
-            final_tables["frontier"] = frontier.repartition(SNAPSHOT_PARTITIONS)
-            final_tables["facts"] = facts.repartition(SNAPSHOT_PARTITIONS)
-            self.catalog.commit_snapshot(
-                final_tables, meta={"wave": wave - 1, "final": True}
-            )
-        filings = self.catalog.read(self.spark, "filings")
+        # frontier/facts are carried from the last commit (Iceberg
+        # shared-manifest pattern), not rewritten; the per-wave metrics ride
+        # the final snapshot's meta as durable lineage, readable without Spark
+        self.catalog.commit_snapshot(
+            {"filings": consolidate_facts(facts).repartition(SNAPSHOT_PARTITIONS)},
+            meta={"wave": wave - 1, "final": True, "wave_metrics": metrics},
+            carry=["frontier", "facts"],
+        )
         return CrawlResult(
-            filings=filings,
+            filings=self.catalog.read(spark, "filings"),
             frontier=frontier,
             facts=facts,
             metrics=metrics,

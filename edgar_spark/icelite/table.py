@@ -12,15 +12,13 @@ so readers either see the previous snapshot or the complete new one: the same
 reader guarantee an Iceberg snapshot commit provides. Rollback = pointing
 ``current`` at an older id; old snapshots are retained for time travel.
 
-Named refs (Iceberg's branches/tags): the manifest additionally carries
-``refs`` — ``{"name": {"type": "tag"|"branch", "snapshot": id}}``. A TAG
-is an immutable pointer (re-tagging raises; drop + recreate to move); a
-BRANCH is mutable and advances when ``commit_snapshot(branch=...)``
-publishes to it, leaving ``current`` (the main line) untouched.
-``expire_snapshots`` keeps every ref-pointed snapshot alive. Snapshot ids
-are allocated as max(existing)+1, never current+1 — so a commit after a
-rollback (or on a branch) creates a NEW snapshot instead of silently
-overwriting a retained one.
+Like an Iceberg manifest, each snapshot describes its tables:
+``{"tables": {name: {"path", "schema", "rows"}}, "meta": {...}}``. The
+schema is the writer's, so a read infers nothing (no Spark job); the row
+count is summed from the written files' Parquet footers, so counting runs
+no Spark job either. Snapshot ids are allocated as max(existing)+1, never
+current+1 — so a commit after a rollback creates a NEW snapshot instead of
+silently overwriting a retained one.
 """
 
 from __future__ import annotations
@@ -28,7 +26,15 @@ from __future__ import annotations
 import json
 import os
 import pathlib
-from typing import Dict, Optional
+import shutil
+from concurrent.futures import ThreadPoolExecutor
+from typing import Dict, Iterable, Optional
+
+import pyarrow.parquet as pq
+
+
+def _footer_rows(path: pathlib.Path) -> int:
+    return sum(pq.read_metadata(f).num_rows for f in path.glob("*.parquet"))
 
 
 class IceliteCatalog:
@@ -53,86 +59,49 @@ class IceliteCatalog:
     def current_snapshot_id(self) -> int:
         return self._read_manifest()["current"]
 
-    # ---------------------------------------------- named refs (tags/branches)
-    def refs(self) -> dict:
-        return dict(self._read_manifest().get("refs", {}))
-
-    def resolve_ref(self, name: str) -> int:
-        r = self._read_manifest().get("refs", {})
-        if name not in r:
-            raise KeyError(f"unknown ref {name!r}")
-        return r[name]["snapshot"]
-
-    def _set_ref(self, name: str, kind: str, snap_id: Optional[int]) -> int:
+    def _tables_of(self, snap_id: Optional[int]) -> dict:
+        """The ``{name: entry}`` map of a snapshot (default: current);
+        empty before the first commit."""
         m = self._read_manifest()
         sid = snap_id or m["current"]
-        if str(sid) not in m["snapshots"]:
-            raise KeyError(f"unknown snapshot {sid}")
-        existing = m.setdefault("refs", {}).get(name)
-        if existing is not None and (existing["type"] == "tag" or kind == "tag"):
-            raise ValueError(
-                f"ref {name!r} already exists as a {existing['type']} — "
-                "tags are immutable (drop_ref + recreate to move)"
-            )
-        m["refs"][name] = {"type": kind, "snapshot": sid}
-        self._publish(m)
-        return sid
+        return m["snapshots"][str(sid)]["tables"] if sid else {}
 
-    def tag(self, name: str, snap_id: Optional[int] = None) -> int:
-        """Immutable named pointer to a snapshot (default: current) —
-        Iceberg's tag: 'the corpus we trained run X on'."""
-        return self._set_ref(name, "tag", snap_id)
+    def _entry(self, name: str, snap_id: Optional[int]) -> dict:
+        tables = self._tables_of(snap_id)
+        if name not in tables:
+            raise KeyError(f"table {name} not in snapshot {snap_id or 'current'}")
+        return tables[name]
 
-    def branch(self, name: str, snap_id: Optional[int] = None) -> int:
-        """Mutable named pointer (default: current); advance it by
-        committing with ``commit_snapshot(branch=name)``."""
-        return self._set_ref(name, "branch", snap_id)
-
-    def drop_ref(self, name: str) -> None:
+    def snapshot_meta(self, snap_id: Optional[int] = None) -> dict:
         m = self._read_manifest()
-        if name not in m.get("refs", {}):
-            raise KeyError(f"unknown ref {name!r}")
-        del m["refs"][name]
-        self._publish(m)
-
-    @staticmethod
-    def _sid(m: dict, snap_id: Optional[int], ref: Optional[str]) -> int:
-        if ref is not None:
-            refs = m.get("refs", {})
-            if ref not in refs:
-                raise KeyError(f"unknown ref {ref!r}")
-            return refs[ref]["snapshot"]
-        return snap_id or m["current"]
-
-    def snapshot_meta(
-        self, snap_id: Optional[int] = None, ref: Optional[str] = None
-    ) -> dict:
-        m = self._read_manifest()
-        sid = self._sid(m, snap_id, ref)
+        sid = snap_id or m["current"]
         if sid == 0:
             return {}
         return m["snapshots"][str(sid)].get("meta", {})
 
-    def table_path(
-        self,
-        name: str,
-        snap_id: Optional[int] = None,
-        ref: Optional[str] = None,
-    ) -> Optional[str]:
-        """Data path of ``name`` in the given snapshot / named ref
-        (default: current), or None if absent."""
-        m = self._read_manifest()
-        sid = self._sid(m, snap_id, ref)
-        if sid == 0:
-            return None
-        return m["snapshots"][str(sid)]["tables"].get(name)
+    def table_path(self, name: str, snap_id: Optional[int] = None) -> Optional[str]:
+        """Data path of ``name`` in the given snapshot (default: current),
+        or None if absent."""
+        return self._tables_of(snap_id).get(name, {}).get("path")
+
+    def rows(self, name: str, snap_id: Optional[int] = None) -> int:
+        """Row count of ``name`` as recorded at commit (no Spark job)."""
+        return self._entry(name, snap_id)["rows"]
+
+    def _write(self, snap_dir: pathlib.Path, name: str, df) -> dict:
+        path = snap_dir / name
+        df.write.mode("overwrite").parquet(str(path))
+        return {
+            "path": str(path),
+            "schema": df.schema.json(),
+            "rows": _footer_rows(path),
+        }
 
     def commit_snapshot(
         self,
         dfs: Dict[str, "object"],
         meta: Optional[dict] = None,
-        carry: Optional[Dict[str, str]] = None,
-        branch: Optional[str] = None,
+        carry: Iterable[str] = (),
     ) -> int:
         """Write every table of the snapshot, then atomically publish it.
 
@@ -142,69 +111,39 @@ class IceliteCatalog:
         unaffected: the manifest is published only after every write
         returns.
 
-        ``carry`` maps table names to already-written data paths (from a
-        previous snapshot) to include unchanged — the Iceberg
-        shared-manifest pattern: a snapshot references files, it does not
-        copy them.
-
-        ``branch`` publishes to that named branch ref instead of the main
-        line: the branch pointer advances, ``current`` is untouched.
-        Snapshot ids are max+1, so branch and main commits interleave
-        without collision (and a post-rollback commit never overwrites a
-        retained snapshot)."""
+        ``carry`` names tables of the current snapshot to include unchanged
+        (path, schema and rows) — the Iceberg shared-manifest pattern: a
+        snapshot references files, it does not copy them."""
+        current = self._tables_of(None)
+        tables = {name: current[name] for name in carry}
         m = self._read_manifest()
-        if branch is not None:
-            refs = m.get("refs", {})
-            if branch not in refs or refs[branch]["type"] != "branch":
-                raise KeyError(f"unknown branch {branch!r}")
         sid = max([0] + [int(i) for i in m["snapshots"]]) + 1
         snap_dir = self.root / f"snap-{sid:06d}"
-        tables = dict(carry or {})
         if len(dfs) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _write(item):
-                name, df = item
-                df.write.mode("overwrite").parquet(str(snap_dir / name))
-
             with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-                list(pool.map(_write, dfs.items()))  # propagate exceptions
-            tables.update({name: str(snap_dir / name) for name in dfs})
+                futures = {
+                    name: pool.submit(self._write, snap_dir, name, df)
+                    for name, df in dfs.items()
+                }
+                tables.update({name: f.result() for name, f in futures.items()})
         else:
-            for name, df in dfs.items():
-                path = snap_dir / name
-                df.write.mode("overwrite").parquet(str(path))
-                tables[name] = str(path)
+            tables.update(
+                {name: self._write(snap_dir, name, df) for name, df in dfs.items()}
+            )
         m["snapshots"][str(sid)] = {"tables": tables, "meta": meta or {}}
-        if branch is not None:
-            m["refs"][branch]["snapshot"] = sid
-        else:
-            m["current"] = sid
+        m["current"] = sid
         self._publish(m)
         return sid
 
-    def read(
-        self,
-        spark,
-        name: str,
-        snap_id: Optional[int] = None,
-        ref: Optional[str] = None,
-    ):
-        m = self._read_manifest()
-        sid = self._sid(m, snap_id, ref)
-        if sid == 0:
-            raise FileNotFoundError(f"no snapshot in {self.root}")
-        snap = m["snapshots"][str(sid)]
-        if name not in snap["tables"]:
-            raise KeyError(f"table {name} not in snapshot {sid}")
-        return spark.read.parquet(snap["tables"][name])
+    def read(self, spark, name: str, snap_id: Optional[int] = None):
+        from pyspark.sql.types import StructType
+
+        entry = self._entry(name, snap_id)
+        schema = StructType.fromJson(json.loads(entry["schema"]))
+        return spark.read.schema(schema).parquet(entry["path"])
 
     def tables(self, snap_id: Optional[int] = None) -> list:
-        m = self._read_manifest()
-        sid = snap_id or m["current"]
-        if sid == 0:
-            return []
-        return sorted(m["snapshots"][str(sid)]["tables"])
+        return sorted(self._tables_of(snap_id))
 
     def expire_snapshots(self, keep_last: int = 5) -> list:
         """Iceberg ``expireSnapshots`` analog: retire every snapshot except
@@ -217,28 +156,22 @@ class IceliteCatalog:
         storage without bound; with it, steady-state disk is
         O(keep_last × table size). Returns the expired snapshot ids.
         """
-        import shutil
-
         m = self._read_manifest()
         ids = sorted(int(s) for s in m["snapshots"])
         keep = set(ids[-max(1, keep_last):])
         keep.add(m["current"])
-        # every ref-pointed snapshot stays alive — dropping a tagged
-        # corpus out from under its name would break the ref contract
-        keep.update(r["snapshot"] for r in m.get("refs", {}).values())
         expired = [i for i in ids if i not in keep]
         if not expired:
             return []
-        live_paths = {
-            p
-            for i in keep
-            for p in m["snapshots"][str(i)]["tables"].values()
-        }
-        dead_paths = {
-            p
-            for i in expired
-            for p in m["snapshots"][str(i)]["tables"].values()
-        } - live_paths
+
+        def paths(sids) -> set:
+            return {
+                e["path"]
+                for i in sids
+                for e in m["snapshots"][str(i)]["tables"].values()
+            }
+
+        dead_paths = paths(expired) - paths(keep)
         for i in expired:
             del m["snapshots"][str(i)]
         self._publish(m)  # readers never see a gap
@@ -273,30 +206,19 @@ class IceliteCatalog:
         like Iceberg's rewrite: compaction changes files, never rows.
         Returns the snapshot id (new on rewrite, current on no-op).
         """
-        # one manifest read supplies path + carry so both come from the
-        # SAME snapshot even if another commit lands mid-call
-        m = self._read_manifest()
-        sid = m["current"]
-        if sid == 0:
-            raise KeyError(f"table {name} not in current snapshot")
-        tables = m["snapshots"][str(sid)]["tables"]
-        path = tables.get(name)
-        if path is None:
-            raise KeyError(f"table {name} not in current snapshot")
-        files = [
-            f
-            for f in pathlib.Path(path).glob("*.parquet")
-            if f.is_file()
-        ]
+        sid = self.current_snapshot_id()
+        path = self._entry(name, sid)["path"]
+        files = [f for f in pathlib.Path(path).glob("*.parquet") if f.is_file()]
         n_bytes = sum(f.stat().st_size for f in files)
         n_target = max(1, -(-n_bytes // target_file_bytes))  # ceil
         if n_target >= len(files):
             return sid  # already compact — no rewrite, no new snapshot
-        df = spark.read.parquet(path).coalesce(n_target)
-        carry = {t: p for t, p in tables.items() if t != name}
+        df = self.read(spark, name, sid).coalesce(n_target)
         info = {"compacted": name, "from_files": len(files), "to_files": n_target}
         info.update(meta or {})
-        return self.commit_snapshot({name: df}, meta=info, carry=carry)
+        return self.commit_snapshot(
+            {name: df}, meta=info, carry=[t for t in self.tables(sid) if t != name]
+        )
 
     def rollback(self, snap_id: int) -> None:
         m = self._read_manifest()

@@ -332,10 +332,11 @@ def perceptron_quality(
     bit-exactly in SQL with the rounds unrolled as CTEs.
 
     Scale shape (the distributed-GD layout): the hashed feature table is
-    computed once and persisted; each round is ONE doc-grain aggregate
-    (margins, partial-agged) plus ONE bucket-grain aggregate (updates) —
-    the driver holds only the ``dim`` weight integers and re-enters them
-    as an array literal, exactly how kmeans_centroids holds k×dim means.
+    computed once and persisted for the training rounds; each round is ONE
+    doc-grain aggregate (margins, partial-agged) plus ONE bucket-grain
+    aggregate (updates) — the driver holds only the ``dim`` weight integers
+    and re-enters them as an array literal, exactly how kmeans_centroids
+    holds k×dim means.
     The corpus never collects; docs with no tokens never block training
     (margin 0 contributes no update) and surface in the output via the
     left join with margin 0, pred -1.
@@ -353,20 +354,25 @@ def perceptron_quality(
             .alias("margin")
         )
 
-    for _ in range(rounds):
-        mis = (
-            margins(w)
-            .filter(F.col(label_col) * F.col("margin") <= 0)
-            .select(id_col)
-        )
-        deltas = (
-            feat.join(mis, id_col)
-            .groupBy("bucket")
-            .agg(F.sum(label_col).cast("long").alias("dw"))
-            .collect()
-        )
-        for r in deltas:
-            w[r["bucket"]] += r["dw"]
+    try:
+        for _ in range(rounds):
+            mis = (
+                margins(w)
+                .filter(F.col(label_col) * F.col("margin") <= 0)
+                .select(id_col)
+            )
+            deltas = (
+                feat.join(mis, id_col)
+                .groupBy("bucket")
+                .agg(F.sum(label_col).cast("long").alias("dw"))
+                .collect()
+            )
+            for r in deltas:
+                w[r["bucket"]] += r["dw"]
+    finally:
+        # the cache serves only the training rounds; the returned plan is
+        # lazy and recomputes the features when it runs
+        feat.unpersist()
 
     scored = margins(w)
     return df.select(id_col, label_col).join(

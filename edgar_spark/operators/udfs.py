@@ -60,6 +60,8 @@ _CONTEXT = [
 #   order (DOC_PRIORITY), link = the report URL;
 # * report → the row-level fact candidates (seq, fin_type, value) in document
 #   order, doc_seq = the doc type's priority; link null.
+# ``error`` is null on all of these. A page whose parser raises yields one
+# row instead, holding only its context and the exception's class name.
 PARSED_SCHEMA = StructType(
     [
         StructField("kind", StringType()),
@@ -76,6 +78,7 @@ PARSED_SCHEMA = StructType(
         StructField("seq", IntegerType()),
         StructField("fin_type", StringType()),
         StructField("value", DoubleType()),
+        StructField("error", StringType()),
     ]
 )
 
@@ -93,22 +96,26 @@ def _parse_rows(t) -> Iterator[tuple]:
     text = t.text or ""
     if t.kind == "query":  # queryPageParser (parser.go:34-53)
         for date, href in query_page_parse(text, t.filing_type).items():
-            yield ctx + (date, None, None, 0, href, None, None, None)
+            yield ctx + (date, None, None, 0, href, None, None, None, None)
     elif t.kind == "index":  # filingPageParser + mapReports (parser.go:86-127)
         try:
             docs = filing_index_parse(text, t.filing_type)
-        except (ValueError, IndexError, KeyError):
-            # Go panics; here the page yields no rows. It passed marker_ok(),
-            # so the crawl's parse_failures does not count it.
+        except (ValueError, IndexError, KeyError) as e:
+            # Go panics; here the page yields one error row
+            yield ctx + (t.filing_date, t.accession) + (None,) * 6 + (type(e).__name__,)
             return
         for doc_type, url in docs.items():
             prio = DOC_PRIORITY.get(doc_type, 99)
-            yield ctx + (t.filing_date, t.accession, doc_type, prio, url, None, None, None)
+            yield ctx + (
+                t.filing_date, t.accession, doc_type, prio, url, None, None, None, None
+            )
     elif t.kind == "report":  # finReportParser (parser.go:326-347)
         facts, _scales = fin_report_facts(text, t.doc_type)
         prio = DOC_PRIORITY.get(t.doc_type, 99)
         for seq, ft, val in facts:
-            yield ctx + (t.filing_date, t.accession, t.doc_type, prio, None, seq, ft, val)
+            yield ctx + (
+                t.filing_date, t.accession, t.doc_type, prio, None, seq, ft, val, None
+            )
 
 
 def parse_pages(df: DataFrame) -> DataFrame:
@@ -116,7 +123,8 @@ def parse_pages(df: DataFrame) -> DataFrame:
 
     Input columns: kind, cik, ticker, filing_type, seed_seq, type_seq,
     filing_date, accession, doc_type, text. Rows of another kind yield
-    nothing. Report rows are all row-level fact candidates; consolidation
+    nothing; a page whose parser raises yields one row with ``error`` set.
+    Report rows are all row-level fact candidates; consolidation
     applies the zero-guard reduction.
     """
     cols = [f.name for f in PARSED_SCHEMA.fields]
@@ -131,7 +139,7 @@ def parse_pages(df: DataFrame) -> DataFrame:
 
 def facts_of(parsed: DataFrame) -> DataFrame:
     """The FACTS_SCHEMA rows of a :func:`parse_pages` output."""
-    return parsed.filter(F.col("kind") == "report").select(
+    return parsed.filter((F.col("kind") == "report") & F.col("error").isNull()).select(
         "cik",
         "ticker",
         "filing_type",

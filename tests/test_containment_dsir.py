@@ -135,3 +135,24 @@ def test_perceptron_quality_single_round_is_label_sum(spark):
     assert out[1]["margin"] == 0 and out[1]["pred"] == -1
     assert out[2]["margin"] == -1 and out[2]["pred"] == -1
     assert b_alpha != b_beta
+
+
+def test_perceptron_quality_releases_feature_cache(spark):
+    """The feature table is cached for the training rounds only: after a
+    call and a collect of its result, the persisted-RDD count is back where
+    it started, and the lazy result still scores every row."""
+    import pandas as pd
+    from edgar_spark.operators.lm import perceptron_quality
+
+    rows = pd.DataFrame(
+        {
+            "doc_id": [1, 2, 3, 4],
+            "label": [1, 1, -1, -1],
+            "text": ["good prose", "clean prose", "spam junk", "junk click"],
+        }
+    )
+    df = spark.createDataFrame(rows)
+    n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    out = {r["doc_id"]: r["pred"] for r in perceptron_quality(df).collect()}
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached
+    assert out == {1: 1, 2: 1, 3: -1, 4: -1}

@@ -4,6 +4,7 @@ consolidation, crawl ordering, URL-seen membership, robots gating, resume.
 
 from __future__ import annotations
 
+import itertools
 import math
 
 import pytest
@@ -55,15 +56,88 @@ def test_facts_carry_on_discovery_waves(spark, tmp_path):
         spark, pages, seeds, config=CrawlConfig(max_waves=5, checkpoint_dir=ckpt)
     ).run()
     cat = IceliteCatalog(ckpt)
-    # wave 0 = query (writes the initial empty facts), wave 1 = index
-    # (no reports pending → carried), wave 2 = report (writes)
-    p0 = cat.table_path("facts", snap_id=1)
-    p1 = cat.table_path("facts", snap_id=2)
-    p2 = cat.table_path("facts", snap_id=3)
+    # snapshot 1 = the seed snapshot; wave 0 = query (no reports pending →
+    # carried), wave 1 = index (carried), wave 2 = report (writes)
+    p0 = cat.table_path("facts", snap_id=2)
+    p1 = cat.table_path("facts", snap_id=3)
+    p2 = cat.table_path("facts", snap_id=4)
     assert p0 == p1  # discovery wave carried the facts files
     assert p2 != p1  # report wave wrote new facts
     assert res.metrics[1]["facts"] == res.metrics[0]["facts"] == 0
     assert res.metrics[2]["facts"] > 0
+
+
+_GROUP_IDS = itertools.count()
+
+
+def _jobs_during(spark, fn):
+    """``(fn(), ids of the Spark jobs fn launched)``, via a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-during-{next(_GROUP_IDS)}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_final_snapshot_reads_from_manifest(spark, crawl):
+    """The final snapshot's manifest describes its tables: reading one
+    launches no Spark job (a schema-less parquet read launches one) and
+    yields the schema Spark infers from the written files."""
+    _, _, res = crawl
+    cat = res.catalog
+    sid = cat.current_snapshot_id()
+    assert cat.tables(sid) == ["facts", "filings", "frontier"]
+    for name in cat.tables(sid):
+        df, jobs = _jobs_during(spark, lambda: cat.read(spark, name, sid))
+        assert jobs == [], name
+        inferred, jobs = _jobs_during(
+            spark, lambda: spark.read.parquet(cat.table_path(name, sid))
+        )
+        assert len(jobs) >= 1  # the count above can see a job
+        assert df.schema == inferred.schema, name
+
+
+def test_final_meta_records_wave_metrics(crawl):
+    """The per-wave metrics ride the final snapshot's meta as JSON (no
+    metrics table); each wave's commit still records the wave before it."""
+    import json
+
+    _, _, res = crawl
+    cat = res.catalog
+    meta = cat.snapshot_meta()
+    assert meta["final"] is True and meta["wave"] == len(res.metrics) - 1
+    assert meta["wave_metrics"] == json.loads(json.dumps(res.metrics))
+    assert "metrics" not in cat.tables()
+    last_wave_meta = cat.snapshot_meta(cat.current_snapshot_id() - 1)
+    assert last_wave_meta["prev_wave_metrics"]["wave"] == len(res.metrics) - 2
+
+
+def test_zero_wave_crawl_keeps_seed_snapshot(spark, tmp_path):
+    """With ``max_waves=0`` the final snapshot carries the seed snapshot's
+    tables: the seed frontier, all pending, empty facts and no filings."""
+    pages = corpus.build_pages(spark, N_COMPANIES, n_filings=1)
+    seeds = corpus.build_seeds(spark, N_COMPANIES)
+    crawler = Crawler(
+        spark, pages, seeds,
+        config=CrawlConfig(max_waves=0, checkpoint_dir=str(tmp_path / "z")),
+    )
+    res = crawler.run()
+    cat = res.catalog
+    assert res.metrics == []
+    assert cat.snapshot_meta() == {"wave": -1, "final": True, "wave_metrics": []}
+    assert cat.tables() == ["facts", "filings", "frontier"]
+    frontier = cat.read(spark, "frontier").select("url", "state").collect()
+    seed_urls = [r["url"] for r in crawler.seed_frontier().collect()]
+    assert sorted(r["url"] for r in frontier) == sorted(seed_urls)
+    assert len(frontier) == 2 * N_COMPANIES
+    assert {r["state"] for r in frontier} == {"pending"}
+    assert cat.rows("facts") == cat.rows("filings") == 0
+    assert res.facts.count() == 0 and res.filings.count() == 0
 
 
 def test_golden_filing_assembled(crawl):
@@ -335,7 +409,7 @@ def test_recanonicalize_migration(spark, tmp_path):
     crawler.catalog.commit_snapshot(
         {"frontier": frontier.unionByName(legacy)},
         meta={"wave": crawler.catalog.snapshot_meta().get("wave", -1)},
-        carry={"facts": facts_path},
+        carry=["facts"],
     )
     assert crawler.catalog.read(spark, "frontier").count() == n0 + 1
 
@@ -442,7 +516,7 @@ def test_crawl_snapshot_retention(spark, tmp_path):
     res = Crawler(spark, pages, seeds, config=cfg).run()
     assert res.filings.count() > 0
     m = res.catalog._read_manifest()
-    # retention window + the final filings/metrics commit
+    # retention window + the final filings commit
     assert len(m["snapshots"]) <= 4
     assert res.catalog.read(spark, "frontier").filter(
         F.col("state") == "fetched"
@@ -557,8 +631,8 @@ def test_mixed_waves_run_one_parse_kernel(spark, monkeypatch):
 
 def test_hostile_pages_counted_as_parse_failures(spark):
     """A fetched page without its kind's marker is a parse failure: counted
-    in ``parse_failures``, never fatal. An index page that has the marker
-    but is malformed (its parser raises) yields no rows and is not counted.
+    in ``parse_failures``, never fatal. So is an index page that has the
+    marker but is malformed (its parser raises): it yields no links.
     Filings that do not depend on a hostile page are unchanged."""
     base = corpus.BASE_URL.rstrip("/")
     cik0 = int(corpus.cik_of(0))
@@ -591,7 +665,7 @@ def test_hostile_pages_counted_as_parse_failures(spark):
     ).run()
 
     assert res.metrics[-1]["pending_next"] == 0
-    assert sum(m["parse_failures"] for m in res.metrics) == 3
+    assert sum(m["parse_failures"] for m in res.metrics) == 4
     expected = _expected_filings(2, 2)
     lost = [(corpus.ticker_of(0), k0), (corpus.ticker_of(0), k1)] + [
         (corpus.ticker_of(1), corpus.accession_of(1, "10-Q", d))

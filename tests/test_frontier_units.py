@@ -570,7 +570,7 @@ def test_icelite_expire_snapshots(spark, tmp_path):
         cat.commit_snapshot({"t": spark.range(i).toDF("v")})
     # snapshot 6 carries snapshot 5's t (shared manifest) and adds u
     t5 = cat.table_path("t", 5)
-    cat.commit_snapshot({"u": spark.range(7).toDF("v")}, carry={"t": t5})
+    cat.commit_snapshot({"u": spark.range(7).toDF("v")}, carry=["t"])
 
     expired = cat.expire_snapshots(keep_last=2)
     assert expired == [1, 2, 3, 4]
@@ -585,6 +585,29 @@ def test_icelite_expire_snapshots(spark, tmp_path):
     assert not (root / "snap-000003").exists()
     assert pathlib.Path(t5).exists()
     assert cat.expire_snapshots(keep_last=2) == []  # idempotent
+
+
+def test_icelite_rows_match_counts(spark, tmp_path):
+    """``rows`` (read from the manifest, no Spark job) equals a counted
+    read for a written empty table, a written non-empty one, a carried one
+    and a compacted one."""
+    from edgar_spark.icelite import IceliteCatalog
+
+    cat = IceliteCatalog(str(tmp_path / "tbl"))
+    s1 = cat.commit_snapshot(
+        {
+            "empty": spark.range(0).toDF("v"),
+            "t": spark.range(1000).toDF("v").repartition(16),
+        }
+    )
+    s2 = cat.commit_snapshot({"u": spark.range(7).toDF("v")}, carry=["empty", "t"])
+    s3 = cat.compact_table(spark, "t", target_file_bytes=1 << 30)
+    assert s3 == s2 + 1 and cat.snapshot_meta(s3)["from_files"] == 16
+    assert cat.tables(s3) == ["empty", "t", "u"]
+    for sid in (s1, s2, s3):
+        for name in cat.tables(sid):
+            assert cat.rows(name, sid) == cat.read(spark, name, sid).count()
+    assert (cat.rows("empty"), cat.rows("t"), cat.rows("u")) == (0, 1000, 7)
 
 
 def test_icelite_time_travel_and_carry(spark, tmp_path):
@@ -604,10 +627,7 @@ def test_icelite_time_travel_and_carry(spark, tmp_path):
     assert cat.snapshot_meta(s1)["tag"] == "first"
 
     # carry-over: new snapshot adds u, references s2's t without rewriting
-    t_path = cat.table_path("t")
-    s3 = cat.commit_snapshot(
-        {"u": spark.range(5).toDF("v")}, carry={"t": t_path}
-    )
+    s3 = cat.commit_snapshot({"u": spark.range(5).toDF("v")}, carry=["t"])
     assert cat.read(spark, "t", snap_id=s3).count() == 10
     assert cat.read(spark, "u").count() == 5
     assert cat.table_path("t", s3) == cat.table_path("t", s2)  # shared files
@@ -615,6 +635,10 @@ def test_icelite_time_travel_and_carry(spark, tmp_path):
     cat.rollback(s1)
     assert cat.read(spark, "t").count() == 3
     assert cat.current_snapshot_id() == s1
+    # a commit after a rollback allocates a FRESH id (no overwrite)
+    s4 = cat.commit_snapshot({"t": spark.range(1).toDF("v")})
+    assert s4 == s3 + 1
+    assert cat.read(spark, "t", snap_id=s2).count() == 10
 
 
 def test_politeness_bucket_md5_mode(spark):
@@ -965,49 +989,6 @@ def test_write_warc_roundtrip(spark):
         r["target_uri"]: r["payload"] for r in parse_warc(files).collect()
     }
     assert back == dict(pages)
-
-
-def test_icelite_refs_tags_branches(spark, tmp_path):
-    """Iceberg-style named refs: tags are immutable pointers, branches
-    advance on branch commits without moving the main line, ref-pointed
-    snapshots survive expiry, and post-rollback commits never collide."""
-    import pytest
-
-    from edgar_spark.icelite.table import IceliteCatalog
-
-    cat = IceliteCatalog(str(tmp_path / "cat"))
-    s1 = cat.commit_snapshot({"t": spark.range(3)})
-    s2 = cat.commit_snapshot({"t": spark.range(5)})
-    cat.tag("train-v1", s1)
-    assert cat.resolve_ref("train-v1") == s1
-    with pytest.raises(ValueError, match="immutable"):
-        cat.tag("train-v1", s2)
-
-    cat.branch("experiment", s2)
-    s3 = cat.commit_snapshot({"t": spark.range(7)}, branch="experiment")
-    assert cat.resolve_ref("experiment") == s3
-    assert cat.current_snapshot_id() == s2  # main line untouched
-    assert cat.read(spark, "t", ref="experiment").count() == 7
-    assert cat.read(spark, "t").count() == 5
-    assert cat.read(spark, "t", ref="train-v1").count() == 3
-
-    # expiry keeps ref-pointed snapshots alive
-    for _ in range(6):
-        cat.commit_snapshot({"t": spark.range(2)})
-    expired = cat.expire_snapshots(keep_last=2)
-    assert s1 not in expired and s3 not in expired
-    assert cat.read(spark, "t", ref="train-v1").count() == 3
-    assert cat.read(spark, "t", ref="experiment").count() == 7
-
-    # post-rollback commit allocates a FRESH id (no overwrite)
-    ids_before = set(int(i) for i in cat._read_manifest()["snapshots"])
-    cat.rollback(min(ids_before))
-    s_new = cat.commit_snapshot({"t": spark.range(1)})
-    assert s_new > max(ids_before)
-
-    cat.drop_ref("experiment")
-    with pytest.raises(KeyError):
-        cat.resolve_ref("experiment")
 
 
 def test_fold_host_case_insensitive(spark):
