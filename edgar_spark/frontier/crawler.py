@@ -429,13 +429,15 @@ class Crawler:
         p_obs = Observation()
         fetched_obs = fetched.observe(p_obs, _cnt(~marker_ok()).alias("parse_failures"))
 
-        # state transitions as one broadcast join of a small (url → state)
-        # update set against the whole frontier — NOT a many-way union of
-        # re-derived window branches (that plan re-embeds the ranking
-        # subtree per branch; Catalyst planning of it dominated small
-        # waves). Deferred/settled rows simply receive no update row. At
-        # 10^10 scale with waves beyond broadcast size this join flips to a
-        # hash shuffle on url, which is the MERGE INTO plan Iceberg runs.
+        # state transitions as one join of a (url → state) update set
+        # against the whole frontier — NOT a many-way union of re-derived
+        # window branches (that plan re-embeds the ranking subtree per
+        # branch; Catalyst planning of it dominated small waves).
+        # Deferred/settled rows simply receive no update row. The update
+        # set is broadcast only on the fetch join's small-wave path: it also
+        # holds every robots-blocked pending row, which the wave budget does
+        # not bound, so beyond BROADCAST_WAVE_THRESHOLD it is a hash shuffle
+        # on url — the MERGE INTO plan Iceberg runs.
         updates = (
             fetched_obs.select("url")
             .withColumn("_new_state", F.lit("fetched"))
@@ -448,8 +450,10 @@ class Crawler:
                 )
             )
         )
+        if fetch_join == "broadcast":
+            updates = F.broadcast(updates)
         frontier_next = (
-            frontier.join(F.broadcast(updates), "url", "left")
+            frontier.join(updates, "url", "left")
             .withColumn("state", F.coalesce(F.col("_new_state"), F.col("state")))
             .withColumn(
                 "wave",

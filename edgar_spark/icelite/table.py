@@ -120,9 +120,14 @@ class IceliteCatalog:
         sid = max([0] + [int(i) for i in m["snapshots"]]) + 1
         snap_dir = self.root / f"snap-{sid:06d}"
         if len(dfs) > 1:
+            from pyspark import inheritable_thread_target
+
             with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
+                # each writer's jobs keep the caller's job group and tags
+                session = next(iter(dfs.values())).sparkSession
+                write = inheritable_thread_target(session)(self._write)
                 futures = {
-                    name: pool.submit(self._write, snap_dir, name, df)
+                    name: pool.submit(write, snap_dir, name, df)
                     for name, df in dfs.items()
                 }
                 tables.update({name: f.result() for name, f in futures.items()})
@@ -214,7 +219,9 @@ class IceliteCatalog:
         if n_target >= len(files):
             return sid  # already compact — no rewrite, no new snapshot
         df = self.read(spark, name, sid).coalesce(n_target)
-        info = {"compacted": name, "from_files": len(files), "to_files": n_target}
+        # a crawl resumes from the current snapshot's wave: keep it
+        info = {k: v for k, v in self.snapshot_meta(sid).items() if k == "wave"}
+        info.update(compacted=name, from_files=len(files), to_files=n_target)
         info.update(meta or {})
         return self.commit_snapshot(
             {name: df}, meta=info, carry=[t for t in self.tables(sid) if t != name]

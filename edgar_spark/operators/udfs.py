@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import operator
 from functools import reduce
-from typing import Iterator
+from typing import Iterator, List
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -91,31 +91,30 @@ def marker_ok() -> Column:
     )
 
 
-def _parse_rows(t) -> Iterator[tuple]:
+def _parse_rows(t) -> List[tuple]:
     ctx = (t.kind, t.cik, t.ticker, t.filing_type, t.seed_seq, t.type_seq)
-    text = t.text or ""
+    try:
+        rows = list(_kind_rows(t, t.text or ""))
+    except (ValueError, IndexError, KeyError) as e:
+        # Go panics; here the page yields one error row
+        return [ctx + (t.filing_date, t.accession) + (None,) * 6 + (type(e).__name__,)]
+    return [ctx + row for row in rows]
+
+
+def _kind_rows(t, text: str) -> Iterator[tuple]:
+    """The rows of one page after its context columns."""
     if t.kind == "query":  # queryPageParser (parser.go:34-53)
         for date, href in query_page_parse(text, t.filing_type).items():
-            yield ctx + (date, None, None, 0, href, None, None, None, None)
+            yield (date, None, None, 0, href, None, None, None, None)
     elif t.kind == "index":  # filingPageParser + mapReports (parser.go:86-127)
-        try:
-            docs = filing_index_parse(text, t.filing_type)
-        except (ValueError, IndexError, KeyError) as e:
-            # Go panics; here the page yields one error row
-            yield ctx + (t.filing_date, t.accession) + (None,) * 6 + (type(e).__name__,)
-            return
-        for doc_type, url in docs.items():
+        for doc_type, url in filing_index_parse(text, t.filing_type).items():
             prio = DOC_PRIORITY.get(doc_type, 99)
-            yield ctx + (
-                t.filing_date, t.accession, doc_type, prio, url, None, None, None, None
-            )
+            yield (t.filing_date, t.accession, doc_type, prio, url, None, None, None, None)
     elif t.kind == "report":  # finReportParser (parser.go:326-347)
         facts, _scales = fin_report_facts(text, t.doc_type)
         prio = DOC_PRIORITY.get(t.doc_type, 99)
         for seq, ft, val in facts:
-            yield ctx + (
-                t.filing_date, t.accession, t.doc_type, prio, None, seq, ft, val, None
-            )
+            yield (t.filing_date, t.accession, t.doc_type, prio, None, seq, ft, val, None)
 
 
 def parse_pages(df: DataFrame) -> DataFrame:

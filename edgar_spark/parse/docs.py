@@ -26,12 +26,20 @@ from edgar_spark.parse.numbers import (
     normalize_number,
     year_of,
 )
-from edgar_spark.parse.tokenizer import END_TAG, ERROR, START_TAG, TEXT, TokenCursor
+from edgar_spark.parse.tokenizer import (
+    END_TAG,
+    ERROR,
+    START_TAG,
+    TEXT,
+    TokenCursor,
+    _fast_tokenize,
+    row_spans,
+)
 from edgar_spark.parse.tables import (
     parse_table_heading,
     parse_table_row,
 )
-from edgar_spark.parse.xbrl import FT_UNKNOWN, fin_data_type_from_tag
+from edgar_spark.parse.xbrl import FT_UNKNOWN, fin_data_type_from_tag, may_hold_fact
 
 REQUIRED_DOC_TYPES = (DOC_OPS, DOC_INC, DOC_BS, DOC_CF, DOC_EN)  # data_def.go:81-87
 
@@ -221,13 +229,96 @@ def filing_index_parse(text: str, file_type: str) -> Dict[str, str]:
     return map_reports(text[rest_offset:], filing_links)
 
 
-def parse_filing_scale(z: TokenCursor, doc_type: str) -> Dict[str, int]:
-    """parser.go:307-316 — scale map from the first heading row; empty map
-    (⇒ no scaling) when the heading is absent, matching the Go behavior."""
-    data = parse_table_heading(z)
-    if data:
-        return filing_scale(data, doc_type)
-    return {}
+def _doc_rows(text: str) -> Tuple[Optional[List[str]], List[Tuple[int, List[str]]]]:
+    """The whole-document walk: the heading row's ``<th>`` texts (None at
+    EOF) and every following row as ``(seq, cells)``."""
+    z = TokenCursor(text)
+    heading = parse_table_heading(z)
+    rows: List[Tuple[int, List[str]]] = []
+    data = parse_table_row(z, True)
+    while data is not None:
+        rows.append((len(rows), data))
+        data = parse_table_row(z, True)
+    return heading, rows
+
+
+def _walk_span(row: str, walk) -> Optional[List[str]]:
+    """``walk`` over one row span tokenized alone. The span's one ``</tr>``
+    is its last token, so a walk that returns rows ended there, on the same
+    tokens as in the document; one that would have run past it met EOF and
+    returns None."""
+    toks = _fast_tokenize(row)
+    return None if toks is None else walk(TokenCursor(toks))
+
+
+def _cells_close(row: str) -> bool:
+    """True if walking this row cannot run past its ``</tr>``.
+
+    ``parse_table_data`` scans a ``<td>`` to ``</td>`` and
+    ``parse_hyperlink_tag`` an ``<a>`` to ``</a>``; both cross ``</tr>``.
+    The walk stays inside the row if every ``<td``/``<a`` start and every
+    ``</a`` lies before the last ``</td>``, and the last ``<a`` start has a
+    ``</a>`` after it. Openers are matched by prefix (over-counting only
+    makes this stricter); closers exactly."""
+    last_td_end = row.rfind("</td>")
+    last_a = row.rfind("<a")
+    return (
+        row.rfind("<td") < last_td_end
+        and row.rfind("</a") < last_td_end
+        and (last_a < 0 or last_a < row.rfind("</a>"))
+    )
+
+
+def _span_rows(text: str) -> Optional[Tuple[List[str], List[Tuple[int, List[str]]]]]:
+    """The row path: :func:`_doc_rows`' result, computed from the row spans
+    of :func:`row_spans`, or None where that is not provably identical.
+
+    A row that cannot yield a fact (``may_hold_fact``) and whose cells close
+    inside it is counted for ``seq`` but never tokenized; every other row is
+    tokenized alone and walked, and must end on its own ``</tr>``. The
+    heading span is walked the same way. Skipped rows are absent from the
+    result; they would contribute no fact."""
+    spans = row_spans(text)
+    if not spans:
+        return None
+    heading = _walk_span(text[slice(*spans[0])], parse_table_heading)
+    if heading is None:
+        return None
+    rows: List[Tuple[int, List[str]]] = []
+    for seq, (start, end) in enumerate(spans[1:]):
+        row = text[start:end]
+        if not may_hold_fact(row) and _cells_close(row):
+            continue
+        data = _walk_span(row, lambda z: parse_table_row(z, True))
+        if data is None:
+            return None
+        rows.append((seq, data))
+    return heading, rows
+
+
+def _facts(
+    heading: Optional[List[str]], rows: List[Tuple[int, List[str]]], doc_type: str
+) -> Tuple[List[Tuple[int, str, float]], Dict[str, int]]:
+    """The per-row fact code shared by both walks (see fin_report_facts)."""
+    # parser.go:307-316 — scale map from the first heading row; empty map
+    # (⇒ no scaling) when the heading is absent, matching the Go behavior
+    scales = filing_scale(heading, doc_type) if heading else {}
+    facts: List[Tuple[int, str, float]] = []
+    for seq, data in rows:
+        if data:
+            ft = fin_data_type_from_tag(data[0])
+            if ft != FT_UNKNOWN:
+                strict = meta.STRICT_DOC_FOR_FIN_TYPE.get(ft)
+                if strict is None or strict == doc_type:
+                    entity = meta.entity_of(ft)
+                    factor = scales.get(entity, 1) if entity else 1
+                    for cell in data[1:]:
+                        if cell:
+                            num = normalize_number(cell)
+                            if num is not None:
+                                facts.append((seq, ft, num * factor))
+                                break
+    return facts, scales
 
 
 def fin_report_facts(
@@ -248,27 +339,13 @@ def fin_report_facts(
     applied by ``edgar_spark.model.consolidate``; this kernel emits all
     row-level candidates in document order.
 
+    Rows come from the row path (:func:`_span_rows`) where the document is
+    in ``row_spans``' grammar and every row keeps to its own span: there
+    only rows that may hold a known tag are tokenized. Anywhere else they
+    come from the whole-document walk (:func:`_doc_rows`), so the output is
+    the walk's by construction (tokenizer.py states the soundness argument).
+
     Returns (facts, scales) where facts = [(seq, fin_type, scaled_value)].
     """
-    z = TokenCursor(text)
-    scales = parse_filing_scale(z, doc_type)
-    facts: List[Tuple[int, str, float]] = []
-    seq = 0
-    data = parse_table_row(z, True)
-    while data is not None:
-        if data:
-            ft = fin_data_type_from_tag(data[0])
-            if ft != FT_UNKNOWN:
-                strict = meta.STRICT_DOC_FOR_FIN_TYPE.get(ft)
-                if strict is None or strict == doc_type:
-                    entity = meta.entity_of(ft)
-                    factor = scales.get(entity, 1) if entity else 1
-                    for cell in data[1:]:
-                        if cell:
-                            num = normalize_number(cell)
-                            if num is not None:
-                                facts.append((seq, ft, num * factor))
-                                break
-        seq += 1
-        data = parse_table_row(z, True)
-    return facts, scales
+    heading, rows = _span_rows(text) or _doc_rows(text)
+    return _facts(heading, rows, doc_type)

@@ -311,6 +311,67 @@ def _fast_tokenize(text: str) -> Optional[List[Tok]]:
     return toks
 
 
+# ------------------------------------------------------------ row spans
+#
+# Report pages are 97% rows that can never yield a fact, so the report
+# parser tokenizes row by row and skips most rows untokenized
+# (``edgar_spark.parse.docs.fin_report_facts``). That is exact only where
+# the raw text's ``<tr>``/``</tr>`` positions are exactly the tag tokens the
+# whole-document walk sees. :func:`row_spans` admits a document only if:
+#
+# * every ``<`` starts an end tag ``</name\s*>`` or a start tag whose
+#   attribute values are all quoted and hold no ``<``/``>`` — no comment,
+#   doctype, ``<?``, bare ``<`` or unquoted value (``_GATE_DOC``; its
+#   whitespace is the ASCII set that ``_parse_attrs`` strips);
+# * every non-self-closing ``<script>``/``<style>`` start tag has its own end
+#   tag as the next ``<`` (raw text such as ``<script>'</tr>'</script>``
+#   would otherwise fake a row tag);
+# * no ``tr``/``td``/``a`` tag name is written in upper case (the raw scans
+#   over rows are lower-case ``str`` searches).
+#
+# Soundness. Under the first two rules each ``<`` is a tag that
+# ``_SCAN_RE`` matches up to the first ``>``, ``_parse_attrs`` consumes its
+# attributes, no ``<!``/``<?`` branch runs and every script/style body is a
+# ``<``-free run that ends at its strict end tag, so ``_fast_tokenize``
+# succeeds on the whole document — which is therefore what ``tokenize``
+# returns. Every tag flushes the text buffer, so a token depends only on
+# its own raw segment (a tag, or the text between two tags). Hence
+# ``_fast_tokenize`` of any span that starts at a ``<`` and ends after a
+# tag's ``>`` yields exactly the document's tokens for that range.
+
+_WS = r"[ \t\n\r\f]"
+_NAME = r"[a-zA-Z][-.a-zA-Z0-9:_]*+"
+_NAME_END = r"(?=[ \t\n\r\f/>])"
+_ATTR = rf"{_WS}++[a-zA-Z_:][^\s=/<>\"'\x00]*+(?:{_WS}*+={_WS}*+(?:\"[^\"<>]*+\"|'[^'<>]*+'))?+"
+# the whole document, tag by tag, in the grammar (possessive: linear time)
+_GATE_DOC = re.compile(rf"(?:[^<]++|</{_NAME}{_WS}*+>|<{_NAME}(?:{_ATTR})*+{_WS}*+/?>)*+")
+_OFF_GRAMMAR = re.compile(
+    # a tr/td/a tag name not in lower case
+    rf"</?(?!(?:tr|td|a){_NAME_END})(?i:tr|td|a){_NAME_END}"
+    # a script/style body that holds a '<' before its own end tag
+    rf"|<((?i:script|style)){_NAME_END}[^>]*(?<!/)>(?![^<]*</\1{_WS}*>)"
+)
+# one row: a non-self-closing <tr …> start tag, then everything up to the
+# first </tr> — or, for an unterminated last row, to the end of the text
+_ROW = re.compile(
+    rf"<tr{_NAME_END}[^>]*(?<!/)>(?:[^<]++|<(?!/tr{_WS}*>))*+(</tr{_WS}*>)?"
+)
+
+
+def row_spans(text: str) -> Optional[List[Tuple[int, int]]]:
+    """The ``(start, end)`` raw span of every complete table row, or None if
+    ``text`` lies outside the grammar described above.
+
+    Rows are delimited as ``parse_table_row`` walks them: a row starts at
+    the first ``<tr`` start tag after the previous row's end (a
+    self-closing ``<tr/>`` starts nothing) and ends after the first
+    ``</tr>`` that follows — a nested ``<tr`` is absorbed. An unterminated
+    last row is not a span (the walk ends there)."""
+    if not _GATE_DOC.fullmatch(text) or _OFF_GRAMMAR.search(text):
+        return None
+    return [m.span() for m in _ROW.finditer(text) if m.group(1)]
+
+
 def tokenize(text: str) -> List[Tok]:
     """Tokenize a whole document into the Go-compatible token list.
 

@@ -12,6 +12,8 @@ plain dict is exact and costs one hash probe per row.
 
 from __future__ import annotations
 
+import html
+import re
 from typing import Optional
 
 # finDataType display strings (data_def.go:52-78)
@@ -148,6 +150,31 @@ def fin_data_type_from_tag(key: str) -> str:
         if ft is not None:
             return ft
     return FT_UNKNOWN
+
+
+# A row yields a fact only if its first cell ``data[0]`` maps to a known
+# type, i.e. it is a key of XBRL_TAGS or ``a_b_K`` with K a key. Either way
+# it ends with the last ``_``-separated part of a key, and ``data[0]`` is
+# one of: the ``'…'`` segment of an unescaped ``onclick`` value (followed
+# there by ``'``), an unescaped quoted ``href`` value (followed by its
+# closing quote), or a stripped, re-escaped text run (followed by
+# whitespace, then the ``<`` of the next tag). Entity-unescaping a row
+# keeps each value and text run intact — no entity name holds a quote or a
+# ``<``. A script or style body is not unescaped by the tokenizer, but
+# there a key end follows ``_``, whitespace or ``>``, which no entity name
+# holds either, so unescaping leaves it in place. Hence a row whose raw
+# text, unescaped if it holds ``&``, has no key end followed by a quote or
+# by ``\s*<`` cannot yield a fact.
+_KEY_ENDS = sorted({k.rsplit("_", 1)[-1] for k in XBRL_TAGS})
+_KEY_END_RE = re.compile(r"(?:%s)(?=['\"]|\s*<)" % "|".join(map(re.escape, _KEY_ENDS)))
+
+
+def may_hold_fact(row: str) -> bool:
+    """False only if the raw row text cannot yield a known ``data[0]`` (see
+    ``_KEY_END_RE``)."""
+    if "&" in row:
+        row = html.unescape(row)
+    return _KEY_END_RE.search(row) is not None
 
 
 def xbrl_tag_from_onclick(onclick: str) -> Optional[str]:

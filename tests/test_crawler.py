@@ -352,6 +352,39 @@ def test_resume_equivalence(spark, tmp_path):
     assert a == b
 
 
+def test_resume_after_compaction_keeps_wave_numbers(spark, tmp_path):
+    """Compacting the frontier between an interrupted run and its resume
+    keeps the snapshot's wave, so the resumed waves continue the numbering:
+    the two runs' (wave, fetched) lists together equal the uninterrupted
+    run's, and the filings are the same."""
+    pages = corpus.build_pages(spark, 1, n_filings=2).cache()
+    seeds = corpus.build_seeds(spark, 1)
+    full = Crawler(
+        spark, pages, seeds, config=CrawlConfig(max_waves=5, checkpoint_dir=str(tmp_path / "full"))
+    ).run()
+
+    part_dir = str(tmp_path / "part")
+    first = Crawler(
+        spark, pages, seeds, config=CrawlConfig(max_waves=1, checkpoint_dir=part_dir)
+    ).run()
+    before = first.catalog.current_snapshot_id()
+    assert first.catalog.compact_table(spark, "frontier", target_file_bytes=1 << 30) != before
+    resumed = Crawler.resume(spark, part_dir, pages, seeds, config=CrawlConfig(max_waves=5))
+
+    def waves(res):
+        return [(m["wave"], m["fetched"]) for m in res.metrics]
+
+    assert waves(first) + waves(resumed) == waves(full)
+
+    def key(df):
+        return sorted(
+            (r["ticker"], r["filing_type"], str(r["filing_date"]), r["revenue"])
+            for r in df.collect()
+        )
+
+    assert key(resumed.filings) == key(full.filings) and key(full.filings)
+
+
 def test_cuckoo_mode_equivalent(spark, tmp_path):
     """seen_filter='cuckoo' produces the same filings as the bloom mode."""
     from edgar_spark.frontier.crawler import CrawlConfig, Crawler
@@ -739,6 +772,64 @@ def test_fetch_join_strategy_switch(spark, monkeypatch):
     assert set(joins_b) == {"broadcast"}
     assert set(joins_s) == {"shuffle"}
     assert key_b == key_s and len(key_b) > 0
+
+
+def test_state_update_join_broadcasts_only_small_waves(spark, monkeypatch):
+    """The frontier's state-transition join broadcasts its update set only
+    on the small-wave path: the set also holds every robots-blocked pending
+    row, which the wave budget does not bound. Filings do not depend on it."""
+    import re
+
+    from edgar_spark.frontier import crawler
+    from edgar_spark.icelite.table import IceliteCatalog
+    from edgar_spark.synth.corpus import build_pages, build_seeds
+
+    pages = build_pages(spark, 3, 2)
+    seeds = build_seeds(spark, 3)
+    commit = IceliteCatalog.commit_snapshot
+    plans = []
+
+    def spy(self, dfs, *args, **kwargs):
+        if "frontier" in dfs:
+            plans.append(dfs["frontier"]._jdf.queryExecution().optimizedPlan().toString())
+        return commit(self, dfs, *args, **kwargs)
+
+    monkeypatch.setattr(IceliteCatalog, "commit_snapshot", spy)
+    # the frontier ⟕ updates join on url, with a broadcast hint on updates
+    hinted = re.compile(
+        r"Join LeftOuter, \(url#\d+ = url#\d+\).*rightHint=\(strategy=broadcast\)"
+    )
+
+    def crawl_with(threshold):
+        monkeypatch.setattr(crawler, "BROADCAST_WAVE_THRESHOLD", threshold)
+        plans.clear()
+        res = Crawler(spark, pages, seeds, config=CrawlConfig(max_waves=4)).run()
+        key = sorted(
+            (r["ticker"], r["filing_type"], str(r["filing_date"]), r["revenue"])
+            for r in res.filings.collect()
+        )
+        return key, sum(bool(hinted.search(p)) for p in plans)
+
+    key_b, hinted_b = crawl_with(10**9)
+    key_s, hinted_s = crawl_with(0)
+    assert hinted_b == 3 and hinted_s == 0
+    assert key_b == key_s and len(key_b) > 0
+
+
+def test_commit_writers_keep_job_group(spark, tmp_path):
+    """A two-table commit writes from worker threads; their jobs still run
+    under the caller's job group."""
+    from edgar_spark.icelite.table import IceliteCatalog
+
+    sc = spark.sparkContext
+    catalog = IceliteCatalog(str(tmp_path / "cat"))
+    sc.setJobGroup("icelite-commit-group", "two-table commit")
+    try:
+        catalog.commit_snapshot({"a": spark.range(10), "b": spark.range(5)})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("icelite-commit-group")
+    assert catalog.rows("a") == 10 and catalog.rows("b") == 5
 
 
 def test_evict_forgets_url(spark, tmp_path):

@@ -212,3 +212,24 @@ def test_cik_page_parse():
     # the Go walk stops at the FIRST </cik> even if it held only whitespace
     # (parser.go:66-74 loops to EndTagToken then falls through to the error)
     assert cik_page_parse("<cik>  </cik><cik>7</cik>") is None
+
+
+def test_parse_rows_report_parser_raising_yields_one_error_row(monkeypatch):
+    """A report parser that raises costs its page one error row, not the
+    task (and, after retries, the crawl)."""
+    from collections import namedtuple
+
+    from edgar_spark.operators import udfs
+
+    def boom(text, doc_type):
+        raise IndexError("hostile page")
+
+    monkeypatch.setattr(udfs, "fin_report_facts", boom)
+    Page = namedtuple("Page", [f.name for f in udfs.PARSED_SCHEMA.fields[:9]] + ["text"])
+    page = Page("report", "1", "T", "10-K", 0, 0, "2020-01-01", "an", "Balance Sheet", "<tr>")
+    rows = list(udfs._parse_rows(page))
+    assert len(rows) == 1
+    row = dict(zip([f.name for f in udfs.PARSED_SCHEMA.fields], rows[0]))
+    assert row["error"] == "IndexError"
+    assert row["seq"] is None and row["fin_type"] is None and row["value"] is None
+    assert len(rows[0]) == len(udfs.PARSED_SCHEMA.fields)
